@@ -84,13 +84,34 @@ SCALE_SUBSET = (
 )
 
 
-def _ensure_sf1(sf1_dir: str) -> None:
-    """Generate the deterministic sf1 corpus if it is not already on
-    disk (same bytes every time — pure hashing, no seed)."""
-    needed = ("documents.parquet", "events.parquet", "lineitem.parquet")
-    if all(os.path.exists(os.path.join(sf1_dir, t)) for t in needed) and (
-        os.path.isdir(os.path.join(sf1_dir, "documents.parquet"))
+def _sf1_complete(sf1_dir: str) -> bool:
+    """True when a finished generator run left the corpus: its
+    ``_SUCCESS`` sentinel is present and matches the document count the
+    shards on disk hold (an interrupted run leaves no sentinel, and a
+    missing or truncated shard no longer matches)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from tools.gen_scale_docs import SUCCESS
+
+    if not all(
+        os.path.exists(os.path.join(sf1_dir, t)) for t in ("events.parquet", "lineitem.parquet")
     ):
+        return False
+    try:
+        with open(os.path.join(sf1_dir, SUCCESS)) as f:
+            expected = int(f.read())
+        shards = glob.glob(os.path.join(sf1_dir, "documents.parquet", "*.parquet"))
+        return bool(shards) and expected == sum(pq.ParquetFile(p).metadata.num_rows for p in shards)
+    except (OSError, ValueError):
+        return False
+
+
+def _ensure_sf1(sf1_dir: str) -> None:
+    """Generate the deterministic sf1 corpus unless a complete one is
+    already on disk (same bytes every time — pure hashing, no seed)."""
+    if _sf1_complete(sf1_dir):
         return
     from tools.gen_scale_docs import main as gen_sf1
 

@@ -1175,7 +1175,7 @@ QUERIES = [
     # (0.61-1.17 s checkpoint → 0.39-0.92 s across four sessions, 7-rep
     # medians 0.671 vs 0.474).  Guide §2.3: when the derived frame is
     # larger than its input, a second pushed-down columnar scan beats
-    # materializing the explode.  (see registry.parts_mode)
+    # materializing the explode.  (see registry.run_parts)
     materialized_backed(
         "substring_dedup", _substring_dedup_parts, ("documents",),
         mode="inline",

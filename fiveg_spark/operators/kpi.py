@@ -20,18 +20,22 @@ At 100 TB both shuffles key on high-cardinality columns (flows, then
 slice×hour) so partitions stay balanced; AQE skew-join/coalesce is on in
 the session.  No Python runs anywhere in this plan.
 
-Every aggregate expression exists ONCE as SQL text shared by the Spark
-plan (via ``F.expr``) and the DuckDB oracle — parity by construction.
+Every aggregate expression exists ONCE, in the ``KPIS`` table, as SQL
+text shared by the Spark plan (via ``F.expr``), the DuckDB oracle and
+the streaming aggregation — parity by construction.
 Floats are rounded to 4 decimals on both sides to absorb summation-order
 noise; counts are CAST to BIGINT (DuckDB sum(int) is HUGEINT otherwise).
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fiveg_spark.functions.stats import pop_kurtosis_sql, pop_skewness_sql
+from fiveg_spark.plans.registry import cnt, dbl, distinct_cnt, pct
 from fiveg_spark.sources.tables import load_table
 
 EPS = 1e-6
@@ -92,40 +96,105 @@ IAT_EXPR = (
 )
 
 
-def _dbl(expr: str, alias: str) -> str:
-    """Float metric, rounded to 4 decimals on BOTH engines.
-
-    The +1e-9 nudge settles round-half ties: averages/ratios of 2-decimal
-    inputs are exact rationals that frequently land ON the .00005 grid,
-    where Spark (BigDecimal HALF_UP) and DuckDB (scaled-double rint) can
-    disagree.  1e-9 is far above cross-engine summation noise (~1e-13
-    relative) and far below the 1e-4 grid, so both engines land on the
-    same side of every boundary."""
-    # `+ 0.0` OUTSIDE the round erases IEEE negative zero: a tiny negative
-    # input (skewness ~ -1e-7) rounds to `-0.0` in DuckDB but renders `0.0`
-    # in Spark — numerically equal, string-hash different.  -0.0 + 0.0 =
-    # +0.0 in IEEE 754, identically in both engines.
-    return f"CAST(round(coalesce({expr}, 0.0) + 1e-9, 4) + 0.0 AS DOUBLE) AS {alias}"
+# The 36 KPIs (ref KafkaKpiPipeline.scala:104-164), in output order: ONE
+# table feeds the batch flagship, its DuckDB oracle, the streaming
+# aggregation and the stream≡batch parity query.  ``sql`` is one
+# aggregate over the per-flow frame (``{idle_threshold}``,
+# ``{small_pkt}``, ``{large_pkt}``, ``{eps}`` fill in at spelling time).
+# An ``approx`` KPI (MEDIAN or DISTINCT) names only its column: the
+# exact median / distinct count is spelled per engine, and streaming —
+# where neither is incrementally computable in append mode — swaps in
+# percentile_approx / HLL, the trade the reference's own streaming path
+# makes (KafkaKpiPipeline.scala:126).
+FLOAT, COUNT = "float", "count"  # 4-decimal rounded DOUBLE / BIGINT
+MEDIAN, DISTINCT = "median", "distinct"
 
 
-def _cnt(expr: str, alias: str) -> str:
-    return f"CAST({expr} AS BIGINT) AS {alias}"
+@dataclass(frozen=True)
+class Kpi:
+    name: str
+    kind: str
+    sql: str
+    approx: str | None = None
 
 
-def _distinct_cnt(col: str, alias: str, dialect: str) -> str:
-    """Exact distinct count.  Spark plans multiple count(DISTINCT x)
-    aggregates via an Expand that replicates every input row once per
-    distinct column (+1 for the plain aggregates) — a 5x row blow-up
-    through the first aggregate at 100 TB (r13 verdict item 6).
-    size(collect_set(x)) computes the same exact count in ONE pass with
-    map-side partial sets and no Expand: collect_set drops NULLs and
-    dedups exactly like count(DISTINCT), and size() of the merged set
-    is the same integer on every engine run (set order never matters).
-    DuckDB keeps the literal count(DISTINCT) — same value, and the
-    oracle text stays the obvious spelling."""
-    if dialect == "spark":
-        return _cnt(f"size(collect_set({col}))", alias)
-    return _cnt(f"count(DISTINCT {col})", alias)
+_IDLE = "sum(CASE WHEN iat > {idle_threshold} THEN 1 ELSE 0 END)"
+
+KPIS: tuple[Kpi, ...] = (
+    # ---- Volume (4) ----
+    Kpi("Throughput_bps", FLOAT, "sum(pkt_len) * 8"),
+    Kpi("Total_Packets", COUNT, "count(*)"),
+    Kpi("Total_Bytes", FLOAT, "sum(pkt_len)"),
+    Kpi("Byte_Velocity", FLOAT, "sum(pkt_len) / (sum(iat) + {eps})"),
+    # ---- Temporal (11) ----
+    Kpi("Avg_IAT", FLOAT, "avg(iat)"),
+    Kpi("Jitter", FLOAT, "stddev_samp(iat)"),
+    Kpi("IAT_Skewness", FLOAT, pop_skewness_sql("iat")),
+    Kpi("IAT_Kurtosis", FLOAT, pop_kurtosis_sql("iat")),
+    Kpi("Min_IAT", FLOAT, "min(iat)"),
+    Kpi("Max_IAT", FLOAT, "max(iat)"),
+    Kpi("IAT_PAPR", FLOAT, "max(iat) / (avg(iat) + {eps})"),
+    Kpi("Transmission_Duration", FLOAT, "max(ts_sec) - min(ts_sec)"),
+    Kpi("Idle_Periods", COUNT, _IDLE),
+    Kpi("Idle_Rate", FLOAT, f"{_IDLE} / count(*)"),
+    Kpi("IAT_Median", FLOAT, "iat", MEDIAN),
+    # ---- Packet size (9) ----
+    Kpi("Avg_Packet_Size", FLOAT, "avg(pkt_len)"),
+    Kpi("Pkt_Size_StdDev", FLOAT, "stddev_samp(pkt_len)"),
+    Kpi("Pkt_Size_Skewness", FLOAT, pop_skewness_sql("pkt_len")),
+    Kpi("Pkt_Size_Kurtosis", FLOAT, pop_kurtosis_sql("pkt_len")),
+    Kpi("Min_Pkt_Size", FLOAT, "min(pkt_len)"),
+    Kpi("Max_Pkt_Size", FLOAT, "max(pkt_len)"),
+    Kpi("Unique_Pkt_Sizes", COUNT, "pkt_len", DISTINCT),
+    Kpi("Small_Pkt_Ratio", FLOAT,
+        "sum(CASE WHEN pkt_len < {small_pkt} THEN 1 ELSE 0 END) / count(*)"),
+    Kpi("Large_Pkt_Ratio", FLOAT,
+        "sum(CASE WHEN pkt_len > {large_pkt} THEN 1 ELSE 0 END) / count(*)"),
+    # ---- Protocol (4) ----
+    Kpi("TCP_Ratio", FLOAT, "sum(CASE WHEN protocol = 'TCP' THEN 1 ELSE 0 END) / count(*)"),
+    Kpi("UDP_Ratio", FLOAT, "sum(CASE WHEN protocol = 'UDP' THEN 1 ELSE 0 END) / count(*)"),
+    Kpi("Protocol_Diversity", COUNT, "protocol", DISTINCT),
+    Kpi("Unique_Src_Ports", COUNT, "src_port", DISTINCT),
+    # ---- TCP health (6) ----
+    Kpi("Avg_Win_Size", FLOAT, "avg(win_size)"),
+    Kpi("Win_Size_StdDev", FLOAT, "stddev_samp(win_size)"),
+    Kpi("Min_Win_Size", FLOAT, "min(win_size)"),
+    Kpi("Max_Win_Size", FLOAT, "max(win_size)"),
+    Kpi("Zero_Win_Count", COUNT, "sum(CASE WHEN win_size = 0 THEN 1 ELSE 0 END)"),
+    # RST flag = bit 2 (0x04), ref KafkaKpiPipeline.scala:158
+    Kpi("RST_Count", COUNT, "sum(CASE WHEN tcp_flags % 8 >= 4 THEN 1 ELSE 0 END)"),
+    # ---- Flow (2) ----
+    Kpi("Unique_Dst_Ports", COUNT, "dst_port", DISTINCT),
+    Kpi("Coeff_Variation_Size", FLOAT, "stddev_samp(pkt_len) / (avg(pkt_len) + {eps})"),
+)
+
+
+def kpi_sql(
+    kpi: Kpi,
+    dialect: str,
+    idle_threshold: float = IDLE_THRESHOLD_S,
+    small_pkt: float = SMALL_PKT,
+    large_pkt: float = LARGE_PKT,
+) -> str:
+    """``kpi``'s bare aggregate in ``dialect``: "spark" / "duckdb" give
+    the exact batch value, "stream" the append-mode-safe Spark form."""
+    if kpi.approx == MEDIAN:
+        if dialect == "stream":
+            return f"percentile_approx({kpi.sql}, 0.5, 100)"
+        return pct(kpi.sql, 0.5, dialect)
+    if kpi.approx == DISTINCT:
+        if dialect == "stream":
+            return f"approx_count_distinct({kpi.sql})"
+        return distinct_cnt(kpi.sql, dialect)
+    return kpi.sql.format(
+        idle_threshold=idle_threshold, small_pkt=small_pkt, large_pkt=large_pkt, eps=EPS
+    )
+
+
+def kpi_column(kpi: Kpi, expr: str) -> str:
+    """``expr AS <name>`` with the batch output discipline: FLOAT
+    rounded to 4 decimals, COUNT cast to BIGINT."""
+    return (dbl if kpi.kind == FLOAT else cnt)(expr, kpi.name)
 
 
 def kpi_aggregates(
@@ -134,60 +203,11 @@ def kpi_aggregates(
     large_pkt: float = LARGE_PKT,
     dialect: str = "spark",
 ) -> list[str]:
-    """The 36 KPI aggregate expressions (ref KafkaKpiPipeline.scala:104-164),
-    as SQL snippets valid in BOTH Spark SQL and DuckDB (one median split)."""
-    median = "percentile(iat, 0.5)" if dialect == "spark" else "quantile_cont(iat, 0.5)"
-    idle = f"sum(CASE WHEN iat > {idle_threshold} THEN 1 ELSE 0 END)"
+    """The 36 rounded KPI aggregate expressions, as SQL valid in
+    ``dialect`` ("spark" or "duckdb")."""
     return [
-        # ---- Volume (4) ----
-        _dbl("sum(pkt_len) * 8", "Throughput_bps"),
-        _cnt("count(*)", "Total_Packets"),
-        _dbl("sum(pkt_len)", "Total_Bytes"),
-        _dbl(f"sum(pkt_len) / (sum(iat) + {EPS})", "Byte_Velocity"),
-        # ---- Temporal (11) ----
-        _dbl("avg(iat)", "Avg_IAT"),
-        _dbl("stddev_samp(iat)", "Jitter"),
-        _dbl(pop_skewness_sql("iat"), "IAT_Skewness"),
-        _dbl(pop_kurtosis_sql("iat"), "IAT_Kurtosis"),
-        _dbl("min(iat)", "Min_IAT"),
-        _dbl("max(iat)", "Max_IAT"),
-        _dbl(f"max(iat) / (avg(iat) + {EPS})", "IAT_PAPR"),
-        _dbl("max(ts_sec) - min(ts_sec)", "Transmission_Duration"),
-        _cnt(idle, "Idle_Periods"),
-        _dbl(f"{idle} / count(*)", "Idle_Rate"),
-        _dbl(median, "IAT_Median"),
-        # ---- Packet size (9) ----
-        _dbl("avg(pkt_len)", "Avg_Packet_Size"),
-        _dbl("stddev_samp(pkt_len)", "Pkt_Size_StdDev"),
-        _dbl(pop_skewness_sql("pkt_len"), "Pkt_Size_Skewness"),
-        _dbl(pop_kurtosis_sql("pkt_len"), "Pkt_Size_Kurtosis"),
-        _dbl("min(pkt_len)", "Min_Pkt_Size"),
-        _dbl("max(pkt_len)", "Max_Pkt_Size"),
-        _distinct_cnt("pkt_len", "Unique_Pkt_Sizes", dialect),
-        _dbl(
-            f"sum(CASE WHEN pkt_len < {small_pkt} THEN 1 ELSE 0 END) / count(*)",
-            "Small_Pkt_Ratio",
-        ),
-        _dbl(
-            f"sum(CASE WHEN pkt_len > {large_pkt} THEN 1 ELSE 0 END) / count(*)",
-            "Large_Pkt_Ratio",
-        ),
-        # ---- Protocol (4) ----
-        _dbl("sum(CASE WHEN protocol = 'TCP' THEN 1 ELSE 0 END) / count(*)", "TCP_Ratio"),
-        _dbl("sum(CASE WHEN protocol = 'UDP' THEN 1 ELSE 0 END) / count(*)", "UDP_Ratio"),
-        _distinct_cnt("protocol", "Protocol_Diversity", dialect),
-        _distinct_cnt("src_port", "Unique_Src_Ports", dialect),
-        # ---- TCP health (6) ----
-        _dbl("avg(win_size)", "Avg_Win_Size"),
-        _dbl("stddev_samp(win_size)", "Win_Size_StdDev"),
-        _dbl("min(win_size)", "Min_Win_Size"),
-        _dbl("max(win_size)", "Max_Win_Size"),
-        _cnt("sum(CASE WHEN win_size = 0 THEN 1 ELSE 0 END)", "Zero_Win_Count"),
-        # RST flag = bit 2 (0x04), ref KafkaKpiPipeline.scala:158
-        _cnt("sum(CASE WHEN tcp_flags % 8 >= 4 THEN 1 ELSE 0 END)", "RST_Count"),
-        # ---- Flow (2) ----
-        _distinct_cnt("dst_port", "Unique_Dst_Ports", dialect),
-        _dbl(f"stddev_samp(pkt_len) / (avg(pkt_len) + {EPS})", "Coeff_Variation_Size"),
+        kpi_column(k, kpi_sql(k, dialect, idle_threshold, small_pkt, large_pkt))
+        for k in KPIS
     ]
 
 

@@ -1181,25 +1181,14 @@ QUERIES.extend([
 # stream≡batch claim, KafkaKpiPipeline.scala:69-176 vs :398-465)
 # --------------------------------------------------------------------------
 
-# KPIs whose streaming aggregate is EXACTLY the batch formula (31 of 36;
-# the other 5 are the approximate trades streaming semantics force —
-# HLL distincts + percentile_approx, KafkaKpiPipeline.scala:126 makes
-# the same trade — certified below via envelope booleans; see the run
-# docstring for which of the two bounds is hard vs statistical).
-_APPROX_KPIS = ("Unique_Pkt_Sizes", "Protocol_Diversity",
-                "Unique_Src_Ports", "Unique_Dst_Ports", "IAT_Median")
-_CNT_KPIS = ("Total_Packets", "Idle_Periods", "Zero_Win_Count", "RST_Count")
-
-
-def _exact_kpi_aliases() -> list[str]:
-    from fiveg_spark.operators.kpi import kpi_aggregates
-
-    out = []
-    for expr in kpi_aggregates(dialect="duckdb"):
-        alias = expr.rsplit(" AS ", 1)[1]
-        if alias not in _APPROX_KPIS:
-            out.append(alias)
-    return out
+# 31 of the 36 KPIs stream with EXACTLY the batch formula; the 5
+# ``approx`` ones in operators/kpi.py:KPIS are the trades streaming
+# semantics force — HLL distincts + percentile_approx,
+# KafkaKpiPipeline.scala:126 makes the same trade — certified below via
+# envelope booleans; see the run docstring for which of the two bounds
+# is hard vs statistical.
+_ENVELOPES = ("uniq_pkt_ok", "proto_div_ok", "uniq_src_ok", "uniq_dst_ok",
+              "median_in_band")
 
 
 def _stream_kpi36_run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1231,7 +1220,7 @@ def _stream_kpi36_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from fiveg_spark.operators.kpi import packet_view, with_iat
+    from fiveg_spark.operators.kpi import COUNT, KPIS, kpi_column, packet_view, with_iat
     from fiveg_spark.streaming.kpi_stream import IAT_SCHEMA, streaming_kpi36
 
     in_cols = [f.name for f in IAT_SCHEMA.fields if f.name != "iat"]
@@ -1317,13 +1306,8 @@ def _stream_kpi36_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= F.greatest(F.lit(2.0), 0.15 * F.col(ex))
             )
 
-        rounded = [
-            F.expr(
-                f"CAST(round(coalesce({a}, 0.0) + 1e-9, 4) + 0.0 AS DOUBLE)"
-                if a not in _CNT_KPIS else f"CAST({a} AS BIGINT)"
-            ).alias(a)
-            for a in _exact_kpi_aliases()
-        ]
+        exact_kpis = [k for k in KPIS if not k.approx]
+        rounded = [F.expr(kpi_column(k, k.name)) for k in exact_kpis]
         result = (
             streamed.join(exact, ["slice", "window_start"], "inner")
             .select(
@@ -1350,13 +1334,8 @@ def _stream_kpi36_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         schema = ", ".join(
             ["slice STRING", "window_start TIMESTAMP"]
-            + [
-                f"{a} {'LONG' if a in _CNT_KPIS else 'DOUBLE'}"
-                for a in _exact_kpi_aliases()
-            ]
-            + [f"{b} BOOLEAN" for b in ("uniq_pkt_ok", "proto_div_ok",
-                                        "uniq_src_ok", "uniq_dst_ok",
-                                        "median_in_band")]
+            + [f"{k.name} {'LONG' if k.kind == COUNT else 'DOUBLE'}" for k in exact_kpis]
+            + [f"{b} BOOLEAN" for b in _ENVELOPES]
         )
         return _collected(spark, result, schema)
     finally:
@@ -1364,17 +1343,12 @@ def _stream_kpi36_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_kpi36_oracle() -> str:
-    from fiveg_spark.operators.kpi import flows_cte, kpi_aggregates
+    from fiveg_spark.operators.kpi import KPIS, flows_cte, kpi_aggregates
 
     aggs = ",\n      ".join(
-        e for e in kpi_aggregates(dialect="duckdb")
-        if e.rsplit(" AS ", 1)[1] not in _APPROX_KPIS
+        e for k, e in zip(KPIS, kpi_aggregates(dialect="duckdb")) if not k.approx
     )
-    bools = ",\n      ".join(
-        f"TRUE AS {b}" for b in ("uniq_pkt_ok", "proto_div_ok",
-                                 "uniq_src_ok", "uniq_dst_ok",
-                                 "median_in_band")
-    )
+    bools = ",\n      ".join(f"TRUE AS {b}" for b in _ENVELOPES)
     return f"""
     {flows_cte("duckdb")}
     SELECT

@@ -10,13 +10,11 @@ Sharing the text makes oracle parity structural instead of aspirational.
 
 from __future__ import annotations
 
-import os
 import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from fiveg_spark.sources.tables import load_table
 
@@ -74,84 +72,27 @@ def sql_backed(
     return Query(name=name, run=run, oracle=sql_fn("duckdb"), deferred=deferred)
 
 
-# session → {rel: persisted part frame} for the MOST RECENT run_parts
-# call (persist mode).  Unpersisting every live part before each call
-# guarantees a re-run recomputes from the parquet inputs — the cache
-# only ever shares work WITHIN one query execution (the ≥2-consumer
-# rule), never across bench iterations or across queries.  Weak keys:
-# a stopped/GC'd session drops its entries.
-_LIVE_PARTS: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
+_PART_MODES = ("checkpoint", "inline")
 
 
-def parts_mode() -> str:
-    """Part execution mode (env-switchable so modes can be interleaved
-    for A/B in one session):
-    'checkpoint' (default): eager localCheckpoint per part — computes
-      the part to completion before the tail plans, so tail references
-      can never recompute it.
-    'persist': LAZY persist (MEMORY_AND_DISK) — no separate job
-      barrier, the tail's first job populates the cache.  Measured
-      SLOWER on multi-reference parts (concurrent tail stages race to
-      build the cache and recompute the part subtree, ute 1.0→3.0 s);
-      kept for the A/B record.
-    'persist_eager': persist + a count() trigger — job barrier kept,
-      but the tail reads columnar cached batches instead of the
-      checkpoint's row RDD.
-
-    'inline': no materialization at all — plain temp views, the tail
-      re-inlines the part subtree per reference.
-
-    The r14 interleaved A/B (tools/ab_parts.py + ad-hoc 3-mode runs,
-    5-7 reps x 4 sessions, sf0.1/local[32]) settled the default:
-    'checkpoint' stays.  Lazy persist LOSES on multi-reference parts
-    (user_transfer_entropy 0.8 → 2.4-3.0 s, vocab_jaccard_matrix
-    0.4 → 0.7-0.8 s) and persist_eager loses everywhere it differs.
-    A structural caveat explains part of it: CacheManager plan
-    substitution never fires for a part whose SQL opens with its own
-    WITH chain (the view-embedded copy renumbers CTERelationDef ids, so
-    the canonicalized plans don't match) — for those parts 'persist'
-    degenerates to 'inline' plus an unused cache entry.  A query opts
-    into 'inline' via materialized_backed(mode=...) only on a
-    repeatable measured win where the re-inlined shape is ALSO the
-    scale-correct one (substring_dedup: exploded part bigger than its
-    input, 2 references — 7-rep medians 0.671 checkpoint / 0.489
-    persist / 0.474 inline)."""
-    return os.environ.get("SPARK_GRAFT_PARTS", "")
-
-
-def run_parts(spark: SparkSession, parts_fn, default_mode: str = "checkpoint") -> DataFrame:
+def run_parts(spark: SparkSession, parts_fn, mode: str = "checkpoint") -> DataFrame:
     """Execute a materialized_backed parts query against whatever views
     are currently registered (tests point the base tables at synthetic
-    frames first)."""
+    frames first).
+
+    'checkpoint' (default) computes each part to completion with an
+    eager localCheckpoint before the tail plans, so no tail reference
+    can recompute it.  'inline' registers plain temp views and lets the
+    tail re-inline the part subtree per reference — cheaper only for a
+    part referenced twice whose materialization writes more bytes than
+    re-running its scans (substring_dedup's exploded positions; the
+    OPTIMIZATION_r14.md A/B record has the measurements)."""
     ctes, tail = parts_fn("spark")
-    # drop any still-persisted parts from the previous run_parts call
-    # FIRST, in both modes: a re-run (bench rep, A/B arm) must recompute
-    # from the inputs, never read a cache the prior call left behind
-    live = _LIVE_PARTS.setdefault(spark, {})
-    for prev in live.values():
-        prev.unpersist()
-    live.clear()
-    mode = parts_mode() or default_mode
-    if not ctes or mode == "checkpoint":
-        for rel, sql in ctes:
-            spark.sql(sql).localCheckpoint().createOrReplaceTempView(rel)
-        return spark.sql(tail)
-    if mode == "inline":
-        # plain temp views: the tail re-inlines the part subtree per
-        # reference.  Cheaper than any materialization when the part is
-        # small and referenced exactly twice in one stage chain.
-        for rel, sql in ctes:
-            spark.sql(sql).createOrReplaceTempView(rel)
-        return spark.sql(tail)
-    eager = mode == "persist_eager"
     for rel, sql in ctes:
-        df = spark.sql(sql).persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            df.count()  # populate the cache before the tail plans
-        df.createOrReplaceTempView(rel)
-        live[rel] = df
+        part = spark.sql(sql)
+        if mode == "checkpoint":
+            part = part.localCheckpoint()
+        part.createOrReplaceTempView(rel)
     return spark.sql(tail)
 
 
@@ -173,11 +114,14 @@ def materialized_backed(
     each cte materializes ONCE via eager localCheckpoint and registers
     as a temp view (use globally-unique ``_mz_``-prefixed names); the
     oracle folds everything back into one WITH chain (a tail that opens
-    with its own WITH merges into it)."""
+    with its own WITH merges into it).  ``mode`` is run_parts' part
+    mode, checked here so a misspelling fails at registration."""
+    if mode not in _PART_MODES:
+        raise ValueError(f"{name}: part mode {mode!r} is not one of {_PART_MODES}")
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_views(spark, tables, sf_dir)
-        return run_parts(spark, parts_fn, default_mode=mode)
+        return run_parts(spark, parts_fn, mode)
 
     ctes, tail = parts_fn("duckdb")
     if not ctes:
@@ -197,11 +141,22 @@ def materialized_backed(
 
 # ---- shared snippet helpers (identical rounding discipline everywhere) ----
 
-NUDGE = "1e-9"  # see operators/kpi.py:_dbl for why
+NUDGE = "1e-9"  # see dbl for why
 
 
 def dbl(expr: str, alias: str) -> str:
-    # `+ 0.0` OUTSIDE the round erases IEEE -0.0 (see operators/kpi.py:_dbl)
+    """Float metric, rounded to 4 decimals on BOTH engines.
+
+    The +1e-9 nudge settles round-half ties: averages/ratios of 2-decimal
+    inputs are exact rationals that frequently land ON the .00005 grid,
+    where Spark (BigDecimal HALF_UP) and DuckDB (scaled-double rint) can
+    disagree.  1e-9 is far above cross-engine summation noise (~1e-13
+    relative) and far below the 1e-4 grid, so both engines land on the
+    same side of every boundary."""
+    # `+ 0.0` OUTSIDE the round erases IEEE negative zero: a tiny negative
+    # input (skewness ~ -1e-7) rounds to `-0.0` in DuckDB but renders `0.0`
+    # in Spark — numerically equal, string-hash different.  -0.0 + 0.0 =
+    # +0.0 in IEEE 754, identically in both engines.
     return f"CAST(round(coalesce({expr}, 0.0) + {NUDGE}, 4) + 0.0 AS DOUBLE) AS {alias}"
 
 

@@ -1,16 +1,15 @@
-"""PCAP binary source → packet-event DataFrame (SURVEY §2 A2).
+"""PCAP decode → packet-event rows (SURVEY §2 A2).
 
 Re-expresses the reference's executor-side PCAP decode
-(PcapKpiExtractor.scala:59-228) Spark-first:
+(PcapKpiExtractor.scala:59-228).  Captures are read through ONE path,
+the ``format("pcap")`` data source (``sources/pcap_datasource.py``),
+which calls the decoder here once per capture file:
 
-- Files load through the ``binaryFile`` DataFrame source (not an RDD):
-  Catalyst handles file listing/splitting, `pathGlobFilter` prunes
-  non-pcap files, and each file's bytes arrive as one row.
 - The byte-level decode — classic pcap global header, per-packet
   headers, Ethernet/IPv4/TCP-UDP field extraction — is genuinely
-  unexpressible in SQL, so it runs as a ``mapInPandas`` generator:
-  Arrow-batched, one Python pass per file, emitting a columnar frame
-  per pcap.  This is the ONLY Python hot path in the ingest tier.
+  unexpressible in SQL, so it runs as a Python generator on the
+  executor, one pass per file.  This is the ONLY Python hot path in
+  the ingest tier.
 - A pcap file must be decoded by one task (packet records are
   variable-length and not splittable), so parallelism = #files, which
   matches the reference's one-file-per-executor layout.  At 100 TB the
@@ -23,12 +22,10 @@ timestamp arithmetic (unsigned 32-bit sec + usec/1e6).
 
 from __future__ import annotations
 
-import os
 import struct
 from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 PACKET_SCHEMA = T.StructType(
@@ -53,22 +50,20 @@ PACKET_SCHEMA = T.StructType(
 )
 
 # dir-name → slice label, as the reference infers slice from HDFS layout
-DEFAULT_SLICE_MARKERS = {"embb": "eMBB", "urllc": "URLLC", "mmtc": "mMTC"}
+SLICE_MARKERS = {"embb": "eMBB", "urllc": "URLLC", "mmtc": "mMTC"}
 
 
-def infer_slice(path: str, markers: dict[str, str] | None = None) -> str:
-    markers = markers or DEFAULT_SLICE_MARKERS
+def infer_slice(path: str) -> str:
     lowered = path.lower()
-    for marker, label in markers.items():
+    for marker, label in SLICE_MARKERS.items():
         if marker in lowered:
             return label
     return "unknown"
 
 
-def decode_pcap_bytes(
-    data: bytes, slice_type: str, file_name: str, max_packets: int = 1_000_000
-) -> Iterator[tuple]:
-    """Pure-Python classic-pcap decoder (one generator per file)."""
+def decode_pcap_bytes(data: bytes, slice_type: str, file_name: str) -> Iterator[tuple]:
+    """Pure-Python classic-pcap decoder (one generator per file): every
+    well-formed record in ``data``, however many."""
     if len(data) < 24:
         return
     magic = struct.unpack(">I", data[:4])[0]
@@ -78,9 +73,9 @@ def decode_pcap_bytes(
         end = ">"
     else:
         return  # not a classic pcap
-    off, n = 24, 0
+    off = 24
     hdr = struct.Struct(f"{end}IIII")
-    while off + 16 <= len(data) and n < max_packets:
+    while off + 16 <= len(data):
         ts_sec, ts_usec, cap_len, orig_len = hdr.unpack_from(data, off)
         off += 16
         if not (0 < cap_len < 65536) or off + cap_len > len(data):
@@ -88,7 +83,6 @@ def decode_pcap_bytes(
             continue
         pkt = data[off : off + cap_len]
         off += cap_len
-        n += 1
         yield _parse_packet(pkt, slice_type, file_name, ts_sec, ts_usec, orig_len, cap_len)
 
 
@@ -169,38 +163,3 @@ def to_canonical_packets(pcap_df: DataFrame) -> DataFrame:
         F.col("window_size").alias("win_size"),
         "tcp_flags",
     )
-
-
-def read_pcap(
-    spark: SparkSession,
-    path: str,
-    glob: str = "*.pcap",
-    slice_markers: dict[str, str] | None = None,
-    max_packets_per_file: int = 1_000_000,
-) -> DataFrame:
-    """Directory of pcap files → packet-event DataFrame."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-    )
-
-    cols = [f.name for f in PACKET_SCHEMA.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                rows = list(
-                    decode_pcap_bytes(
-                        bytes(row["content"]),
-                        infer_slice(row["path"], slice_markers),
-                        os.path.basename(row["path"]),
-                        max_packets_per_file,
-                    )
-                )
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(decode, schema=PACKET_SCHEMA)

@@ -1,8 +1,8 @@
 """PCAP as a first-class Spark data source (SURVEY §2 A31): the Spark
 4 Python DataSource API wrapped around A2's pure-Python decoder, so
-capture files read as ``spark.read.format("pcap").load(dir)`` — no
-binaryFile + mapInPandas assembly required at every call site, and the
-source itself participates in Catalyst's filter pushdown.
+capture files read as ``spark.read.format("pcap").load(dir)`` — the one
+capture reader, batch and streaming — and the source itself
+participates in Catalyst's filter pushdown.
 
 Two pushdowns, each honest about what it saves:
 

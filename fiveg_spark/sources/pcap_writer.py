@@ -71,7 +71,7 @@ from pyspark.sql.datasource import (
 )
 
 # slice label → marker subdirectory (the exact inverse of
-# pcap.infer_slice's DEFAULT_SLICE_MARKERS lookup)
+# pcap.infer_slice's SLICE_MARKERS lookup)
 SLICE_DIRS = {"eMBB": "embb", "URLLC": "urllc", "mMTC": "mmtc"}
 _OTHER_DIR = "other"  # contains no marker → reads back as "unknown"
 

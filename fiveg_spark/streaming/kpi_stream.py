@@ -11,7 +11,8 @@ Two-stage streaming plan:
    so at cluster scale state shards with the shuffle.
 
 2. Watermarked tumbling-window aggregation.  Same 36 aggregate
-   expressions as the batch flagship, with the two adjustments streaming
+   expressions as the batch flagship (``operators/kpi.py:KPIS``, one
+   table for both), with the two adjustments streaming
    semantics force: exact ``count(DISTINCT)`` and exact ``percentile``
    are not incrementally computable in append mode, so the stream uses
    ``approx_count_distinct`` (HLL) and ``percentile_approx`` — the same
@@ -31,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from fiveg_spark.operators.kpi import KPIS, kpi_sql
 
 IAT_SCHEMA = T.StructType(
     [
@@ -88,59 +91,10 @@ def with_streaming_iat(packets: DataFrame) -> DataFrame:
     )
 
 
-def streaming_kpi_aggs(
-    idle_threshold: float = 600.0,
-    small_pkt: float = 50.0,
-    large_pkt: float = 150.0,
-    eps: float = 1e-6,
-) -> list:
-    """The 36 KPIs, streaming-safe (HLL distincts, approx percentile)."""
-    from fiveg_spark.functions.stats import pop_kurtosis_sql, pop_skewness_sql
-
-    idle = f"sum(CASE WHEN iat > {idle_threshold} THEN 1 ELSE 0 END)"
-    exprs = {
-        "Throughput_bps": "sum(pkt_len) * 8",
-        "Total_Packets": "count(*)",
-        "Total_Bytes": "sum(pkt_len)",
-        "Byte_Velocity": f"sum(pkt_len) / (sum(iat) + {eps})",
-        "Avg_IAT": "avg(iat)",
-        "Jitter": "stddev_samp(iat)",
-        # identical power-sum formulas to the batch flagship
-        # (functions/stats.py) — sum/count only, so incrementally
-        # computable; the stream≡batch claim holds bit-for-bit on the
-        # moment KPIs, not just approximately
-        "IAT_Skewness": pop_skewness_sql("iat"),
-        "IAT_Kurtosis": pop_kurtosis_sql("iat"),
-        "Min_IAT": "min(iat)",
-        "Max_IAT": "max(iat)",
-        "IAT_PAPR": f"max(iat) / (avg(iat) + {eps})",
-        "Transmission_Duration": "max(ts_sec) - min(ts_sec)",
-        "Idle_Periods": idle,
-        "Idle_Rate": f"{idle} / count(*)",
-        "IAT_Median": "percentile_approx(iat, 0.5, 100)",
-        "Avg_Packet_Size": "avg(pkt_len)",
-        "Pkt_Size_StdDev": "stddev_samp(pkt_len)",
-        "Pkt_Size_Skewness": pop_skewness_sql("pkt_len"),
-        "Pkt_Size_Kurtosis": pop_kurtosis_sql("pkt_len"),
-        "Min_Pkt_Size": "min(pkt_len)",
-        "Max_Pkt_Size": "max(pkt_len)",
-        "Unique_Pkt_Sizes": "approx_count_distinct(pkt_len)",
-        "Small_Pkt_Ratio": f"sum(CASE WHEN pkt_len < {small_pkt} THEN 1 ELSE 0 END) / count(*)",
-        "Large_Pkt_Ratio": f"sum(CASE WHEN pkt_len > {large_pkt} THEN 1 ELSE 0 END) / count(*)",
-        "TCP_Ratio": "sum(CASE WHEN protocol = 'TCP' THEN 1 ELSE 0 END) / count(*)",
-        "UDP_Ratio": "sum(CASE WHEN protocol = 'UDP' THEN 1 ELSE 0 END) / count(*)",
-        "Protocol_Diversity": "approx_count_distinct(protocol)",
-        "Unique_Src_Ports": "approx_count_distinct(src_port)",
-        "Avg_Win_Size": "avg(win_size)",
-        "Win_Size_StdDev": "stddev_samp(win_size)",
-        "Min_Win_Size": "min(win_size)",
-        "Max_Win_Size": "max(win_size)",
-        "Zero_Win_Count": "sum(CASE WHEN win_size = 0 THEN 1 ELSE 0 END)",
-        "RST_Count": "sum(CASE WHEN tcp_flags % 8 >= 4 THEN 1 ELSE 0 END)",
-        "Unique_Dst_Ports": "approx_count_distinct(dst_port)",
-        "Coeff_Variation_Size": f"stddev_samp(pkt_len) / (avg(pkt_len) + {eps})",
-    }
-    return [F.expr(e).alias(name) for name, e in exprs.items()]
+def streaming_kpi_aggs() -> list:
+    """The 36 KPIs, streaming-safe: the batch table's expressions,
+    unrounded, with HLL distincts and an approximate median."""
+    return [F.expr(kpi_sql(k, "stream")).alias(k.name) for k in KPIS]
 
 
 def streaming_kpi36(

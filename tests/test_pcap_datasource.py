@@ -1,5 +1,5 @@
 """A31 PCAP Python DataSource: format("pcap") reads equal the A2
-binaryFile+mapInPandas path, slice pushdown prunes whole files before
+decoder's rows column for column, slice pushdown prunes whole files before
 a byte is read, protocol pushdown filters inside the decode loop, and
 unsupported filters come back for Spark to evaluate.
 """
@@ -29,18 +29,20 @@ def _lay_out_captures(tmp_path):
     return str(tmp_path)
 
 
-def test_format_pcap_matches_mapinpandas_path(spark, tmp_path):
-    from fiveg_spark.sources.pcap import read_pcap
+def test_format_pcap_matches_decoder_rows(spark, tmp_path):
+    from fiveg_spark.sources.pcap import PACKET_SCHEMA, decode_pcap_bytes, infer_slice
 
     root = _lay_out_captures(tmp_path)
     register_pcap_source(spark)
     via_source = spark.read.format("pcap").load(root)
-    via_a2 = read_pcap(spark, f"{root}/*/*.pcap")
-    cols = sorted(via_source.columns)
-    assert cols == sorted(via_a2.columns)
-    a = sorted(map(tuple, via_source.select(*cols).collect()))
-    b = sorted(map(tuple, via_a2.select(*cols).collect()))
-    assert a == b and len(a) == 3
+    assert via_source.schema == PACKET_SCHEMA
+    expected = sorted(
+        row
+        for f in sorted(tmp_path.glob("*/*.pcap"))
+        for row in decode_pcap_bytes(f.read_bytes(), infer_slice(str(f)), f.name)
+    )
+    assert sorted(map(tuple, via_source.collect())) == expected
+    assert len(expected) == 3
 
 
 def test_slice_pushdown_prunes_files_unread(spark, tmp_path):

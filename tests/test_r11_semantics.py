@@ -98,22 +98,45 @@ def test_bh_screen_pure_null_has_zero_discoveries(spark):
     assert all(r["p_two_sided"] > 0.99 for r in out)
 
 
-def test_streaming_kpi_aggs_match_batch_formulas():
-    """The stream≡batch alignment is structural: the streaming agg's
-    moment KPIs must be the very same SQL text the batch flagship
-    compiles (not merely numerically close)."""
-    from pyspark.sql import functions as F  # noqa: F401
+def test_streaming_kpi_aggs_match_batch_formulas(spark):
+    """The stream≡batch alignment is structural: the streaming agg has
+    the batch flagship's 36 names in the same order, 31 of its
+    expressions are the batch expression itself (unrounded), and the
+    other 5 are exactly the approximate form of the same column —
+    percentile_approx for the median, HLL for the 4 distinct counts."""
+    import re
 
-    from fiveg_spark.functions.stats import pop_kurtosis_sql, pop_skewness_sql
+    from pyspark.sql import functions as F
+
+    from fiveg_spark.operators.kpi import kpi_aggregates
     from fiveg_spark.streaming.kpi_stream import streaming_kpi_aggs
 
-    texts = [str(c._jc if hasattr(c, "_jc") else c) for c in streaming_kpi_aggs()]
-    joined = "\n".join(texts)
-    for frag in ("power(", "CASE WHEN"):
-        assert frag in pop_skewness_sql("iat")
-    # the compiled columns embed the shared power-sum text's shape:
-    # sum(power(iat, 3)) appears only in the stats.py formulation
-    assert "power(iat, 3)" in joined.lower() or "POWER(iat, 3)" in joined
+    unwrap = re.compile(
+        r"CAST\(round\(coalesce\((?P<f>.*), 0\.0\) \+ 1e-9, 4\) \+ 0\.0 AS DOUBLE\)"
+        r"|CAST\((?P<c>.*) AS BIGINT\)"
+    )
+    batch = []
+    for text in kpi_aggregates(dialect="spark"):
+        wrapped, name = text.rsplit(" AS ", 1)
+        m = unwrap.fullmatch(wrapped)
+        batch.append((name, m["f"] if m["f"] is not None else m["c"]))
+
+    approx = {}
+    expected = []
+    for name, expr in batch:
+        if m := re.fullmatch(r"percentile\((\w+), 0\.5\)", expr):
+            approx[name] = expr = f"percentile_approx({m[1]}, 0.5, 100)"
+        elif m := re.fullmatch(r"size\(collect_set\((\w+)\)\)", expr):
+            approx[name] = expr = f"approx_count_distinct({m[1]})"
+        expected.append(str(F.expr(expr).alias(name)))
+
+    stream = [str(c) for c in streaming_kpi_aggs()]
+    assert len(stream) == len(expected) == 36
+    assert stream == expected
+    assert sorted(approx) == sorted([
+        "IAT_Median", "Unique_Pkt_Sizes", "Protocol_Diversity",
+        "Unique_Src_Ports", "Unique_Dst_Ports",
+    ])
 
 
 def test_source_ingestion_burstiness_planted_modes(spark):

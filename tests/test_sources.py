@@ -16,7 +16,8 @@ from fiveg_spark.sources.kafka import (
     parse_packet_json,
     to_kafka_records,
 )
-from fiveg_spark.sources.pcap import decode_pcap_bytes, infer_slice, read_pcap
+from fiveg_spark.sources.pcap import decode_pcap_bytes, infer_slice
+from fiveg_spark.sources.pcap_datasource import register_pcap_source
 from fiveg_spark.sources.tables import normalize_event_ts
 from fiveg_spark.sources.sinks import streaming_parquet_sink, write_partitioned
 from tests.conftest import SF_DIR
@@ -72,13 +73,23 @@ def test_decode_pcap_both_endianness_and_truncation():
     assert len(rows) == 4
 
 
+def test_decode_pcap_keeps_every_record_past_one_million():
+    # the whole capture is already in memory: no record cap may
+    # silently truncate a large file
+    n = 1_000_001
+    rec = struct.pack("<IIII", 1700000000, 0, 1, 1) + b"\x00"
+    blob = _pcap_bytes([]) + rec * n
+    assert sum(1 for _ in decode_pcap_bytes(blob, "eMBB", "big.pcap")) == n
+
+
 def test_read_pcap_dataframe(spark, tmp_path):
     d = tmp_path / "captures" / "embb"
     d.mkdir(parents=True)
     pkts = [_ipv4_tcp_packet(sport=1000 + i) for i in range(10)]
     (d / "cap0.pcap").write_bytes(_pcap_bytes(pkts))
     (d / "ignore.txt").write_bytes(b"not a pcap")
-    df = read_pcap(spark, str(tmp_path / "captures"))
+    register_pcap_source(spark)
+    df = spark.read.format("pcap").load(str(tmp_path / "captures"))
     rows = df.orderBy("src_port").collect()
     assert len(rows) == 10
     assert rows[0]["slice_type"] == "eMBB"
@@ -193,7 +204,8 @@ def test_pcap_to_kpi_end_to_end(spark, tmp_path):
         blob += pkt
     (d / "c.pcap").write_bytes(blob)
 
-    packets = to_canonical_packets(read_pcap(spark, str(tmp_path / "caps")))
+    register_pcap_source(spark)
+    packets = to_canonical_packets(spark.read.format("pcap").load(str(tmp_path / "caps")))
     kpis = kpi36_from_packets(packets, idle_threshold=900.0, small_pkt=60.0, large_pkt=90.0)
     rows = kpis.collect()
     assert len(rows) == 3  # 3 hourly windows, single slice

@@ -1,10 +1,10 @@
-"""Dump `.explain("formatted")` for named queries to plans/r13/ (guide §1.3).
+"""Dump `.explain("formatted")` for named queries to plans/<round>/ (guide §1.3).
 
 Unlike profile_headline.py this runs NO timed actions — it builds each
 DataFrame via the contract (materialized_backed parts still execute
 their eager localCheckpoint jobs, so keep sf small unless plan sizes
-matter) and writes plans/r13/<name>_<tag>.txt plus a one-line feature
-count to stderr.
+matter) and writes plans/<round>/<name>_<tag>.txt plus a one-line feature
+count to stderr.  <round> is $SPARK_GRAFT_PLANS_ROUND (default r14).
 
 Usage: python tools/dump_plans.py <tag> <query> [query ...]
 """

@@ -20,7 +20,9 @@ round regenerates byte-identical input:
   recomputed from the permuted text.
 
 The remaining tables hard-copy from sf0.1 (ensure_views wants them
-present; the scaling queries only scan documents).
+present; the scaling queries only scan documents).  The last step
+writes ``_SUCCESS`` holding the document count, so a reader can tell a
+finished corpus from one an interrupted run left behind.
 
 Usage: python tools/gen_scale_docs.py [out_dir]   (default
 /tmp/spark_graft_sf1)
@@ -38,6 +40,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
+SUCCESS = "_SUCCESS"  # written last, holding the document count
 COPIES = 10
 ID_STRIDE = 1_000_000
 
@@ -53,6 +56,9 @@ def permute_tokens(text: str, copy: int) -> str:
 
 def main(out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
+    success = os.path.join(out_dir, SUCCESS)
+    if os.path.exists(success):
+        os.remove(success)  # an interrupted rerun must not look complete
     rows = duckdb.sql(
         f"SELECT doc_id, text, lang, source, n_chars"
         f" FROM read_parquet('{SRC}/documents.parquet') ORDER BY doc_id"
@@ -98,6 +104,8 @@ def main(out_dir: str) -> None:
                 shutil.copy(os.path.join(SRC, name), dst)
     n = len(out["doc_id"])
     chars = sum(out["n_chars"])
+    with open(success, "w") as f:
+        f.write(str(n))  # last step: the corpus is complete
     print(f"{out_dir}: {n} docs, {chars} chars")
 
 

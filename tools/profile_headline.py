@@ -4,7 +4,8 @@ For each headline query:
   - build the DataFrame via the contract,
   - one warm-up materialization, then N timed runs of BOTH the bench
     action (`.count()`) and the noop sink (computes every column, §1.4),
-  - dump `.explain("formatted")` to plans/r13/<name>_<tag>.txt,
+  - dump `.explain("formatted")` to plans/$SPARK_GRAFT_PLANS_ROUND/<name>_<tag>.txt
+    (default r14),
   - count plan features (Exchange / joins / Python eval nodes).
 
 Prints one JSON line per query and a total, to stderr progress + stdout
