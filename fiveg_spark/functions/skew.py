@@ -1,8 +1,9 @@
 """Skew-mitigation primitives (SURVEY §3).
 
-AQE's skew-join handling covers joins; these cover the OTHER skew shape
-— a grouped aggregation where a handful of hot keys (one giant flow, one
-dominant slice) swamp single reducers:
+AQE's skew-join splits oversized join partitions; these cover the skew
+it misses — a grouped aggregation where a handful of hot keys (one giant
+flow, one dominant slice) swamp single reducers, and a join whose hot
+key still dominates one task:
 
 - ``salted_agg``: two-phase aggregation.  Phase 1 groups on
   (keys + salt) so a hot key's rows spread over ``n_salts`` reducers;
@@ -11,6 +12,15 @@ dominant slice) swamp single reducers:
   them: avg = sum/count, moments from power sums).
 - ``with_salt``: the salt column itself (uniform, deterministic given
   the row, derived from a unique id column).
+- ``salted_join``: a sort-merge join whose hot key AQE's skew-join
+  cannot split (it sees post-shuffle partition sizes, but one key
+  inside one task still dominates).  The big side gets a salt in
+  [0, buckets) per row — a hash of a unique column, so re-runs and
+  retried tasks place rows identically (no ``rand()``) — and the small
+  side is exploded ``buckets``× so every salted key still finds its
+  match.  Output is row-for-row the plain join's; the small side grows
+  by the factor, the right trade whenever |small| × buckets ≪
+  |big-hot-key|.
 
 This is the classic map-side spread the reference would need at 100 TB
 when one 5G flow carries orders of magnitude more packets than the
@@ -50,6 +60,27 @@ def salted_agg(
     return partial.groupBy(*keys).agg(
         *[c.alias(n) for n, c in merge_aggs.items()]
     )
+
+
+def salted_join(
+    big: DataFrame,
+    small: DataFrame,
+    on: str,
+    salt_from: str,
+    buckets: int = 8,
+    how: str = "inner",
+) -> DataFrame:
+    """Equi-join ``big`` with ``small`` on column ``on``, salting the
+    key into ``buckets`` sub-keys.  ``salt_from`` is a column of ``big``
+    whose hash places each row deterministically."""
+    salted_big = big.withColumn(
+        "_salt", F.pmod(F.hash(F.col(salt_from)), F.lit(buckets))
+    )
+    salted_small = small.withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
+    )
+    out = salted_big.join(salted_small, [on, "_salt"], how)
+    return out.drop("_salt")
 
 
 def skew_stats(df: DataFrame, keys: list[str]) -> DataFrame:

@@ -399,7 +399,7 @@ FROM counted
 
 
 def gru_forward_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fiveg_spark.ml.model import DTYPE, forward, init_weights, predict_residuals
+    from fiveg_spark.ml.model import forward, init_weights, predict_residuals, stack_seqs
     from fiveg_spark.ml.sequences import sliding_sequences
 
     scaled, _ = robust_scale(feature_frame(spark, sf_dir))
@@ -437,8 +437,7 @@ def gru_forward_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         max_diff = 0.0
         for r in sample:
-            X = np.stack([np.asarray(step, dtype=DTYPE) for step in r["seq"]])[None]
-            local = forward(X, w)[0].astype(np.float64)
+            local = forward(stack_seqs([r["seq"]]), w)[0].astype(np.float64)
             got = np.asarray(dist[(r["slice"], r["window_start"])])
             max_diff = max(max_diff, float(np.abs(local - got).max()))
     finally:

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
+from fiveg_spark.ml.features import feature_frame, robust_scale
 from fiveg_spark.ml.var import lag_design
 
 DELTA = 1.0
@@ -131,35 +131,4 @@ def scalar_design(spark: SparkSession, sf_dir: str, p: int = 3) -> DataFrame:
     d = lag_design(scaled, p=p).filter(F.col("split") == "train")
     return d.select(
         "slice", "x", F.element_at("y", 1).cast("double").alias("y_t")
-    )
-
-
-def huber_var_coeffs(spark: SparkSession, sf_dir: str, p: int = 3) -> DataFrame:
-    """Rows-only query surface: Huber vs OLS coefficients side by side
-    (the contract row shows how far the robust fit moves each term)."""
-    design = scalar_design(spark, sf_dir, p=p).cache()
-    try:
-        hub = huber_fit(design)
-        ols = huber_fit(design, iters=1)  # unit weights = plain OLS
-    finally:
-        design.unpersist()
-    k = len(FEATURES)
-    data = []
-    for slice_name in sorted(hub):
-        for term in range(len(hub[slice_name])):
-            term_name = (
-                "const"
-                if term == 0
-                else f"L{(term - 1) // k + 1}.{FEATURES[(term - 1) % k]}"
-            )
-            data.append(
-                (
-                    slice_name,
-                    term_name,
-                    round(float(hub[slice_name][term]), 6),
-                    round(float(ols[slice_name][term]), 6),
-                )
-            )
-    return spark.createDataFrame(
-        data, "slice string, term string, coeff_huber double, coeff_ols double"
     )

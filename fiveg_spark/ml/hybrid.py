@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
 from fiveg_spark.ml.model import init_weights, predict_residuals
+from fiveg_spark.ml.sequences import preceding_windows
 from fiveg_spark.ml.var import lag_design, normal_equations, solve_coefficients
 
 _RESID_SCHEMA = T.StructType(
@@ -92,13 +93,10 @@ def residual_pipeline(
     )
     resid = residual_frame(design, spark.sparkContext.broadcast(coeffs)).localCheckpoint()
 
-    seq_expr = (
-        f"collect_list(resid) OVER (PARTITION BY slice ORDER BY window_start "
-        f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING)"
+    # target before seq: the column order the plan ledger fingerprints
+    sequences = preceding_windows(
+        resid, "resid", window, ("slice", "window_start", "split", "target", "seq")
     )
-    sequences = resid.selectExpr(
-        "slice", "window_start", "split", "resid AS target", f"{seq_expr} AS seq"
-    ).filter(F.size("seq") == window)
     return resid, sequences, params
 
 

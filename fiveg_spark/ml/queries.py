@@ -1,18 +1,17 @@
 """Driver-contract query surface for the ML block (SURVEY §2 D6-D9).
 
 ``sequence_counts`` gets a true DuckDB oracle (the window-collect_list
-operator's cardinality/bounds are SQL-expressible); the VAR fit, network
-forward and hybrid forecast are genuinely non-SQL (iterative linear
-algebra) → rows-only, with numpy-equivalence pytests standing in as the
-strong check.
+operator's cardinality/bounds are SQL-expressible), and the Holt,
+Holt-Winters and Kalman recursions replay as DuckDB RECURSIVE CTEs.
+The VAR fit, network forward, hybrid forecast and training are
+iterative linear algebra: they certify through invariant rows in
+``ml/certify.py``.
 """
 
 from __future__ import annotations
 
-from fiveg_spark.ml import hybrid, var
-from fiveg_spark.ml.features import feature_frame, robust_scale
-from fiveg_spark.ml.model import init_weights, predict_residuals
-from fiveg_spark.ml.sequences import WINDOW, sequence_counts, sliding_sequences
+from fiveg_spark.ml.features import feature_frame
+from fiveg_spark.ml.sequences import WINDOW, sequence_counts
 from fiveg_spark.operators.timeseries import _hourly_cte
 from fiveg_spark.plans.registry import Query
 
@@ -48,28 +47,6 @@ GROUP BY slice, split
 """
 
 
-def _run_gru_forward(spark, sf_dir):
-    scaled, _ = robust_scale(feature_frame(spark, sf_dir))
-    seqs = sliding_sequences(scaled)
-    preds = predict_residuals(seqs, spark.sparkContext.broadcast(init_weights()))
-    # compact surface: per (slice, split) count + mean |pred|
-    from pyspark.sql import functions as F
-
-    return preds.groupBy("slice", "split").agg(
-        F.count("*").alias("n"),
-        F.round(
-            F.avg(F.aggregate("resid_pred", F.lit(0.0), lambda a, x: a + F.abs(x))),
-            4,
-        ).alias("mean_abs_pred"),
-    )
-
-
-def _huber_coeffs(spark, sf_dir):
-    from fiveg_spark.ml.huber import huber_var_coeffs
-
-    return huber_var_coeffs(spark, sf_dir)
-
-
 def _holt(spark, sf_dir):
     from fiveg_spark.ml.holt import holt_forecast
 
@@ -80,12 +57,6 @@ def _holt_winters(spark, sf_dir):
     from fiveg_spark.ml.holt import holt_winters_forecast
 
     return holt_winters_forecast(spark, sf_dir)
-
-
-def _train_eval(spark, sf_dir):
-    from fiveg_spark.ml.train import hybrid_train_eval
-
-    return hybrid_train_eval(spark, sf_dir)
 
 
 def _kalman(spark, sf_dir):
@@ -133,17 +104,6 @@ QUERIES = [
     Query("kalman_level", _kalman, _kalman_oracle()),
     Query("holt_grid_search", _holt_grid, _holt_grid_oracle()),
     Query("sequence_counts", _run_sequence_counts, _SEQUENCE_COUNTS_ORACLE),
-    # the former rows-only surfaces (var_ols_coeffs, huber_var_coeffs,
-    # gru_forward, hybrid_forecast_eval, hybrid_train_eval) now certify
-    # through invariant rows in ml/certify.py; the raw functions remain
-    # importable and pytest-pinned to independent numpy implementations
-    # (kept referenced here so the surfaces stay part of the package API)
+    # the VAR, Huber, forward, forecast and training surfaces certify
+    # through invariant rows in ml/certify.py
 ]
-
-RAW_SURFACES = {
-    "var_ols_coeffs": var.var_ols_coeffs,
-    "huber_var_coeffs": _huber_coeffs,
-    "gru_forward": _run_gru_forward,
-    "hybrid_forecast_eval": hybrid.hybrid_eval,
-    "hybrid_train_eval": _train_eval,
-}

@@ -18,30 +18,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fiveg_spark.ml.features import FEATURES, as_vector
+from fiveg_spark.ml.features import as_vector
 
 WINDOW = 60
 
 
-def sliding_sequences(df: DataFrame, window: int = WINDOW) -> DataFrame:
-    """(slice, window_start, seq: array<array<double>>, target: array<double>)
+SEQ_COLUMNS = ("slice", "window_start", "split", "seq", "target")
 
-    ``seq`` holds rows t-window .. t-1; ``target`` is row t — exactly
-    make_seq's (X[i], y[i]) pairing keyed by the timestamp of y.
-    """
-    vec = as_vector(df, "x")
-    seq = (
-        f"collect_list(x) OVER (PARTITION BY slice ORDER BY window_start "
-        f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING)"
-    )
-    out = vec.selectExpr(
-        "slice",
-        "window_start",
-        "split",
-        f"{seq} AS seq",
-        "x AS target",
-    )
+
+def preceding_windows(
+    df: DataFrame, value: str, window: int = WINDOW, columns: tuple[str, ...] = SEQ_COLUMNS
+) -> DataFrame:
+    """One row per row t of each slice's series with a full history:
+    ``seq`` holds ``value`` at rows t-window .. t-1, ``target`` is
+    ``value`` at row t — exactly make_seq's (X[i], y[i]) pairing keyed
+    by the timestamp of y.  ``columns`` orders the output."""
+    exprs = {
+        "seq": f"collect_list({value}) OVER (PARTITION BY slice ORDER BY window_start "
+        f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING) AS seq",
+        "target": f"{value} AS target",
+    }
+    out = df.selectExpr(*(exprs.get(c, c) for c in columns))
     return out.filter(F.size("seq") == window)
+
+
+def sliding_sequences(df: DataFrame, window: int = WINDOW) -> DataFrame:
+    """(slice, window_start, split, seq: array<array<double>>,
+    target: array<double>) over the feature vector ``x``."""
+    return preceding_windows(as_vector(df, "x"), "x", window)
 
 
 def sequence_counts(df: DataFrame, window: int = WINDOW) -> DataFrame:

@@ -17,11 +17,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
+from fiveg_spark.ml.features import FEATURES
 
 
 def lag_design(df: DataFrame, p: int = 3) -> DataFrame:
@@ -131,22 +131,3 @@ def solve_coefficients(gram: DataFrame) -> dict[str, np.ndarray]:
             xtx + 1e-9 * np.eye(xtx.shape[0]), xty
         )  # ridge epsilon guards rank-deficient constant features
     return out
-
-
-def var_ols_coeffs(spark: SparkSession, sf_dir: str, p: int = 3) -> DataFrame:
-    """Rows-only query surface: long-form fitted coefficients."""
-    scaled, _ = robust_scale(feature_frame(spark, sf_dir))
-    design = lag_design(scaled, p=p).filter(F.col("split") == "train")
-    coeffs = solve_coefficients(normal_equations(design))
-    k = len(FEATURES)
-    data = []
-    for slice_name, B in sorted(coeffs.items()):
-        for term in range(B.shape[0]):
-            term_name = (
-                "const"
-                if term == 0
-                else f"L{(term - 1) // k + 1}.{FEATURES[(term - 1) % k]}"
-            )
-            for f_idx, feat in enumerate(FEATURES):
-                data.append((slice_name, feat, term_name, round(float(B[term, f_idx]), 6)))
-    return spark.createDataFrame(data, "slice string, equation string, term string, coeff double")

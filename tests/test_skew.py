@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fiveg_spark.plans.skew import salted_join
+from fiveg_spark.functions.skew import salted_join
 
 
 def _skewed_frames(spark):

@@ -12,22 +12,29 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from fiveg_spark.ml.train import (
-    Dims,
-    backward,
-    fit,
-    forward,
-    huber_loss_grad,
-    init_weights,
-)
+from fiveg_spark.ml.model import Dims, forward, init_weights
+from fiveg_spark.ml.train import backward, fit, huber_loss_grad
 
 TINY = Dims(k=3, d1=4, u1=5, u2=4, heads=2, kd=3, d2=4)
 
 
 def _loss(X, Y, w, dims):
-    pred, _ = forward(X, w, dims)
-    loss, _ = huber_loss_grad(pred, Y, delta=0.35)
+    loss, _ = huber_loss_grad(forward(X, w, dims), Y, delta=0.35)
     return loss
+
+
+def test_recording_tape_leaves_forward_output_bit_identical():
+    """Training and inference share one forward: recording the tape
+    for backprop must not change a single bit of the prediction."""
+    rng = np.random.default_rng(5)
+    X = rng.normal(size=(128, 60, 7)).astype(np.float32)
+    w = init_weights()
+    tape: list = []
+    plain = forward(X, w)
+    taped = forward(X, w, tape=tape)
+    assert plain.dtype == np.float32
+    assert np.array_equal(plain, taped)
+    assert len(tape) == 6  # grn1, gru1, gru2, mha, grn2, (grn2 out, masks)
 
 
 def test_gradients_match_finite_differences():
@@ -38,9 +45,10 @@ def test_gradients_match_finite_differences():
     Y = rng.normal(scale=1.5, size=(B, TINY.k)).astype(np.float64)
     w = init_weights(TINY, seed=3, dtype=np.float64)
 
-    pred, caches = forward(X, w, TINY)
+    tape: list = []
+    pred = forward(X, w, TINY, tape=tape)
     _, dpred = huber_loss_grad(pred, Y, delta=0.35)
-    grads, _ = backward(dpred, caches, w, TINY)
+    grads, _ = backward(dpred, tape, w, TINY)
 
     assert set(grads) == set(w), "a parameter is missing its gradient"
     eps = 1e-6
@@ -103,7 +111,6 @@ def test_weight_save_load_round_trip(spark, tmp_path):
 
     from fiveg_spark.ml.hybrid import residual_pipeline
     from fiveg_spark.ml.train import (
-        Dims,
         collect_weights,
         load_weights,
         predict_trained,
@@ -112,7 +119,7 @@ def test_weight_save_load_round_trip(spark, tmp_path):
     )
     from tests.conftest import SF_DIR
 
-    dims = Dims(k=7)
+    dims = Dims()
     _, sequences, _ = residual_pipeline(spark, SF_DIR)
     sequences = sequences.persist()
     rows = train_residual_models(sequences, dims, epochs=2).persist()
@@ -150,12 +157,12 @@ def test_gradients_match_finite_differences_with_dropout():
     )
 
     def loss_at(w):
-        pred, _ = forward(X, w, TINY, masks=masks)
-        return huber_loss_grad(pred, Y, delta=0.35)[0]
+        return huber_loss_grad(forward(X, w, TINY, masks=masks), Y, delta=0.35)[0]
 
-    pred, caches = forward(X, w, TINY, masks=masks)
+    tape: list = []
+    pred = forward(X, w, TINY, masks=masks, tape=tape)
     _, dpred = huber_loss_grad(pred, Y, delta=0.35)
-    grads, _ = backward(dpred, caches, w, TINY)
+    grads, _ = backward(dpred, tape, w, TINY)
 
     assert set(grads) == set(w)
     eps = 1e-6
