@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
+from fiveg_spark.operators.kpi import kpi36
 from fiveg_spark.operators.timeseries import _hourly_cte
 from fiveg_spark.plans.registry import Query
 
@@ -76,7 +77,7 @@ def _counted_cte() -> str:
 def var_ols_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fiveg_spark.ml.var import collect_gram, lag_design, normal_equations
 
-    scaled, _ = robust_scale(feature_frame(spark, sf_dir))
+    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
     design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train").persist()
     try:
         gram = collect_gram(normal_equations(design))
@@ -402,7 +403,7 @@ def gru_forward_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fiveg_spark.ml.model import forward, init_weights, predict_residuals, stack_seqs
     from fiveg_spark.ml.sequences import sliding_sequences
 
-    scaled, _ = robust_scale(feature_frame(spark, sf_dir))
+    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
     seqs = sliding_sequences(scaled).persist()
     preds = None
     try:
@@ -728,7 +729,7 @@ def ridge_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-dependent half, as for D6) and states the theorems as TRUE."""
     from fiveg_spark.ml.var import collect_gram, lag_design, normal_equations
 
-    scaled, _ = robust_scale(feature_frame(spark, sf_dir))
+    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
     design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train").persist()
     try:
         gram = collect_gram(normal_equations(design))
@@ -845,7 +846,7 @@ def _order_criteria(spark: SparkSession, sf_dir: str):
         return _ORDER_CACHE[key]
     from fiveg_spark.ml.var import collect_gram, lag_design, normal_equations
 
-    scaled, _ = robust_scale(feature_frame(spark, sf_dir))
+    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
     design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train").persist()
     k = len(FEATURES)
     try:

@@ -2,35 +2,41 @@
 
 Mirrors train.py:52-110 (FEATURE_MAP projection, missing→0.0) and
 train.py:193-196 (RobustScaler fit on the ordered 70% train split,
-transform applied everywhere).  The frame is the hourly slice series —
-tiny after the events aggregation (3 slices × ~720 h at any sf), so all
-ML steps downstream operate on a reduced DataFrame while the heavy
-shuffle happened once in the KPI aggregation.
+transform applied everywhere).  As in the reference, the features are
+read off the KPI table: ``feature_frame`` projects any hourly KPI frame
+(``kpi36``, or ``kpi36_from_packets`` over a capture), and Catalyst
+prunes the KPI aggregation to the 5 KPIs it reads.  The frame is the
+hourly slice series (3 slices × ~720 h at any sf), so all ML steps
+downstream operate on a reduced DataFrame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from fiveg_spark.operators.timeseries import _feature_vectors_sql
-from fiveg_spark.plans.registry import ensure_views
+# feature ← KPI column (train.py FEATURE_MAP); None: a source missing
+# from the KPI set (Retransmission_Ratio, Entropy_Score) → 0.0
+# (train.py:104-109)
+FEATURE_KPIS = {
+    "throughput": "Throughput_bps",
+    "packets": "Total_Packets",
+    "jitter": "Jitter",
+    "latency": "Avg_IAT",
+    "reliability": None,
+    "congestion": "Avg_Win_Size",
+    "complexity": None,
+}
+FEATURES = tuple(FEATURE_KPIS)
 
-FEATURES = (
-    "throughput",
-    "packets",
-    "jitter",
-    "latency",
-    "reliability",
-    "congestion",
-    "complexity",
-)
 
-
-def feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def feature_frame(kpis: DataFrame) -> DataFrame:
     """(slice, window_start, 7 feature cols) — train.py's final_df."""
-    ensure_views(spark, ("events",), sf_dir)
-    return spark.sql(_feature_vectors_sql("spark"))
+    return kpis.select(
+        "slice",
+        "window_start",
+        *[(F.col(k) if k else F.lit(0.0)).alias(f) for f, k in FEATURE_KPIS.items()],
+    )
 
 
 def with_split(df: DataFrame) -> DataFrame:

@@ -98,8 +98,9 @@ def holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-slice Holt fit over the hourly throughput series + h-step
     linear forecasts (level + h·trend)."""
     from fiveg_spark.ml.features import feature_frame
+    from fiveg_spark.operators.kpi import kpi36
 
-    frame = feature_frame(spark, sf_dir).select("slice", "window_start", "throughput")
+    frame = feature_frame(kpi36(spark, sf_dir)).select("slice", "window_start", "throughput")
     return (
         frame.groupBy("slice")
         .applyInPandas(_holt_kernel, schema=_SCHEMA)
@@ -383,8 +384,9 @@ def holt_winters_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale shape as D21: one shuffle on the series key, sequential
     recursion over the already-reduced hourly frame."""
     from fiveg_spark.ml.features import feature_frame
+    from fiveg_spark.operators.kpi import kpi36
 
-    frame = feature_frame(spark, sf_dir).select("slice", "window_start", "throughput")
+    frame = feature_frame(kpi36(spark, sf_dir)).select("slice", "window_start", "throughput")
     return (
         frame.groupBy("slice")
         .applyInPandas(_hw_kernel, schema=_HW_SCHEMA)
@@ -448,8 +450,9 @@ def holt_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOINs the grid), so the oracle certifies the entire sweep, not
     just the winner.  ``is_best`` flags the argmin on rounded MAE."""
     from fiveg_spark.ml.features import feature_frame
+    from fiveg_spark.operators.kpi import kpi36
 
-    frame = feature_frame(spark, sf_dir).select("slice", "window_start", "throughput")
+    frame = feature_frame(kpi36(spark, sf_dir)).select("slice", "window_start", "throughput")
     return (
         frame.groupBy("slice")
         .applyInPandas(_holt_grid_kernel, schema=_GRID_SCHEMA)

@@ -6,7 +6,8 @@ network, final_pred = var_pred + resid_pred, inverse RobustScaler,
 clip at 0.
 
 Distributed layout:
-  scaled frame (hourly, tiny)                       [1 shuffle: events agg]
+  kpi36 → 7 features → scaled frame (hourly, tiny)  [1 shuffle: KPI agg,
+                                                     pruned to 5 KPIs]
     → lag design via window functions               [reuses series order]
     → VAR fit: partial Gram mapInPandas + solve     [tiny shuffle, D6]
     → per-row VAR forecast + residuals (numpy dot,
@@ -30,6 +31,7 @@ from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
 from fiveg_spark.ml.model import init_weights, predict_residuals
 from fiveg_spark.ml.sequences import preceding_windows
 from fiveg_spark.ml.var import lag_design, normal_equations, solve_coefficients
+from fiveg_spark.operators.kpi import kpi36
 
 _RESID_SCHEMA = T.StructType(
     [
@@ -77,14 +79,14 @@ def residual_frame(design: DataFrame, coeffs_bc) -> DataFrame:
 def residual_pipeline(
     spark: SparkSession, sf_dir: str, p: int = 3, window: int = 60
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared front half of the hybrid: scaled hourly features → VAR fit
-    on the train split → per-row residuals → sliding residual sequences.
-    Returns (resid, sequences, scaler_params)."""
-    scaled, params = robust_scale(feature_frame(spark, sf_dir))
+    """Shared front half of the hybrid: kpi36 → scaled hourly features →
+    VAR fit on the train split → per-row residuals → sliding residual
+    sequences.  Returns (resid, sequences, scaler_params)."""
+    scaled, params = robust_scale(feature_frame(kpi36(spark, sf_dir)))
     # localCheckpoint both shared frames: design feeds the Gram solve
     # AND the residual scorer, resid feeds the sequence window AND the
     # var_pred join downstream — without materialization each reference
-    # re-runs the events aggregation + scaling pipeline (advisor
+    # re-runs the kpi36 aggregation + scaling pipeline (advisor
     # repeated-scan). The hourly frame is tiny (~2k rows/slice), so the
     # checkpoint is effectively free.
     design = lag_design(scaled, p=p).localCheckpoint()

@@ -109,8 +109,9 @@ def kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-slice local-level Kalman filter over the hourly throughput
     series: final level / variance / gain + one-step innovation MAE."""
     from fiveg_spark.ml.features import feature_frame
+    from fiveg_spark.operators.kpi import kpi36
 
-    frame = feature_frame(spark, sf_dir).select("slice", "window_start", "throughput")
+    frame = feature_frame(kpi36(spark, sf_dir)).select("slice", "window_start", "throughput")
     return (
         frame.groupBy("slice")
         .applyInPandas(_kalman_kernel, schema=_SCHEMA)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from fiveg_spark.ml.features import feature_frame
 from fiveg_spark.ml.sequences import WINDOW, sequence_counts
+from fiveg_spark.operators.kpi import kpi36
 from fiveg_spark.operators.timeseries import _hourly_cte
 from fiveg_spark.plans.registry import Query
 
@@ -19,7 +20,7 @@ from fiveg_spark.plans.registry import Query
 def _run_sequence_counts(spark, sf_dir):
     from fiveg_spark.ml.features import with_split
 
-    return sequence_counts(with_split(feature_frame(spark, sf_dir)))
+    return sequence_counts(with_split(feature_frame(kpi36(spark, sf_dir))))
 
 
 _SEQUENCE_COUNTS_ORACLE = f"""

@@ -393,8 +393,8 @@ def _backfill_audit_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _backfill_audit_oracle() -> str:
     # the same events→packets→flows CTE prefix the certified kpi36
     # oracle uses, with only the two audited KPI columns recomputed
-    # (their exact kpi_aggregates expressions) at the hourly grain
-    from fiveg_spark.operators.kpi import flows_cte
+    # (their KPIS entries) at the hourly grain
+    from fiveg_spark.operators.kpi import flows_cte, kpi_as
 
     return f"""
     {flows_cte("duckdb")},
@@ -402,9 +402,8 @@ def _backfill_audit_oracle() -> str:
       SELECT
         slice,
         date_trunc('hour', ts) AS window_start,
-        CAST(count(*) AS BIGINT) AS Total_Packets,
-        CAST(round(coalesce(sum(pkt_len) * 8, 0.0) + 1e-9, 4) + 0.0
-             AS DOUBLE) AS Throughput_bps
+        {kpi_as("Total_Packets", "Total_Packets", "duckdb")},
+        {kpi_as("Throughput_bps", "Throughput_bps", "duckdb")}
       FROM flows
       GROUP BY slice, date_trunc('hour', ts)
     )

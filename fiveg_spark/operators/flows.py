@@ -12,7 +12,7 @@ aggregate (one row per flow), which AQE keeps cheap.
 
 from __future__ import annotations
 
-from fiveg_spark.operators.kpi import IDLE_THRESHOLD_S, flows_cte
+from fiveg_spark.operators.kpi import IDLE_THRESHOLD_S, flows_cte, kpi_as
 from fiveg_spark.plans.registry import Query, cnt, dbl, pct, sql_backed
 
 SESSION_GAP_S = 1800.0  # 30 min inactivity closes a session
@@ -115,9 +115,9 @@ def _slice_throughput_hourly_sql(d: str) -> str:
     SELECT
       slice,
       date_trunc('hour', ts) AS window_start,
-      {dbl("sum(pkt_len) * 8", "throughput_bps")},
-      {cnt("count(*)", "total_packets")},
-      {dbl("sum(pkt_len)", "total_bytes")}
+      {kpi_as("Throughput_bps", "throughput_bps", d)},
+      {kpi_as("Total_Packets", "total_packets", d)},
+      {kpi_as("Total_Bytes", "total_bytes", d)}
     FROM flows
     GROUP BY slice, date_trunc('hour', ts)
     """

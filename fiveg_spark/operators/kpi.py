@@ -41,7 +41,9 @@ from fiveg_spark.sources.tables import load_table
 EPS = 1e-6
 # Reference thresholds (KafkaKpiPipeline.scala:25-27) are packet-scale
 # (0.1 s idle, 100/1400 B); the month-long synthetic events stream is
-# hour-scale, so defaults rescale while staying env-overridable.
+# hour-scale, so the defaults are rescaled: module constants, overridden
+# only per call through the ``idle_threshold``/``small_pkt``/``large_pkt``
+# keywords of ``kpi_sql``, ``kpi_aggregates`` and ``kpi36_from_packets``.
 IDLE_THRESHOLD_S = 600.0  # IAT above this = idle period
 SMALL_PKT = 50.0
 LARGE_PKT = 150.0
@@ -191,10 +193,18 @@ def kpi_sql(
     )
 
 
-def kpi_column(kpi: Kpi, expr: str) -> str:
-    """``expr AS <name>`` with the batch output discipline: FLOAT
-    rounded to 4 decimals, COUNT cast to BIGINT."""
-    return (dbl if kpi.kind == FLOAT else cnt)(expr, kpi.name)
+def kpi_column(kpi: Kpi, expr: str, alias: str | None = None) -> str:
+    """``expr AS <alias>`` (default: the KPI's name) with the batch
+    output discipline: FLOAT rounded to 4 decimals, COUNT cast to
+    BIGINT."""
+    return (dbl if kpi.kind == FLOAT else cnt)(expr, alias or kpi.name)
+
+
+def kpi_as(name: str, alias: str, dialect: str) -> str:
+    """The batch column of the KPI called ``name``, aliased ``alias`` —
+    how other hourly series spell a KPI without restating its formula."""
+    kpi = next(k for k in KPIS if k.name == name)
+    return kpi_column(kpi, kpi_sql(kpi, dialect), alias)
 
 
 def kpi_aggregates(

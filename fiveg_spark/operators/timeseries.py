@@ -15,7 +15,8 @@ operate on the reduced series).
 
 from __future__ import annotations
 
-from fiveg_spark.operators.kpi import flows_cte
+from fiveg_spark.ml.features import feature_frame
+from fiveg_spark.operators.kpi import flows_cte, kpi36, kpi_as
 from fiveg_spark.plans.registry import (
     NUDGE,
     corr_safe,
@@ -29,8 +30,6 @@ from fiveg_spark.plans.registry import (
     sql_backed,
 )
 
-# Hourly series CTE reused by most queries here (rounded measure so every
-# downstream window sees identical inputs in both engines).
 CONC_TOP_SHARES = (0.01, 0.05, 0.10)
 
 
@@ -73,27 +72,38 @@ def _value_concentration_sql(d: str) -> str:
     """
 
 
+# Hourly series CTE reused by most queries here (rounded measure so every
+# downstream window sees identical inputs in both engines).  Each column
+# is a kpi36 KPI under the series' own name; the formulas live only in
+# KPIS.
+HOURLY_KPIS = (
+    ("throughput_bps", "Throughput_bps"),
+    ("total_packets", "Total_Packets"),
+    ("jitter", "Jitter"),
+    ("latency", "Avg_IAT"),
+    ("congestion", "Avg_Win_Size"),
+)
+
+
 def _hourly_cte(d: str) -> str:
+    cols = ",\n        ".join(kpi_as(kpi, col, d) for col, kpi in HOURLY_KPIS)
     return f"""{flows_cte(d)},
     hourly AS (
       SELECT
         slice,
         date_trunc('hour', ts) AS h,
-        {dbl("sum(pkt_len) * 8", "throughput_bps")},
-        {cnt("count(*)", "total_packets")},
-        {dbl("stddev_samp(iat)", "jitter")},
-        {dbl("avg(iat)", "latency")},
-        {dbl("avg(win_size)", "congestion")}
+        {cols}
       FROM flows
       GROUP BY slice, date_trunc('hour', ts)
     )"""
 
 
-def _feature_vectors_sql(d: str) -> str:
+def _feature_vectors_oracle() -> str:
     # D1 — train.py FEATURE_MAP: sources missing from the KPI set
     # (Retransmission_Ratio, Entropy_Score) become 0.0 (train.py:104-109).
+    # DuckDB twin of ml/features.feature_frame(kpi36(...)).
     return f"""
-    {_hourly_cte(d)}
+    {_hourly_cte("duckdb")}
     SELECT
       slice,
       h AS window_start,
@@ -106,6 +116,10 @@ def _feature_vectors_sql(d: str) -> str:
       CAST(0.0 AS DOUBLE) AS complexity
     FROM hourly
     """
+
+
+def _feature_vectors_run(spark, sf_dir):
+    return feature_frame(kpi36(spark, sf_dir))
 
 
 def _moving_avg_sql(d: str) -> str:
@@ -1101,7 +1115,7 @@ QUERIES = [
     materialized_backed("retention_halflife", _retention_halflife_parts, ("events",)),
     sql_backed("twap_value_daily", _twap_sql, ("events",)),
     sql_backed("variant_props_stats", _variant_props_sql, ("events",)),
-    sql_backed("feature_vectors", _feature_vectors_sql, ("events",)),
+    Query("feature_vectors", _feature_vectors_run, _feature_vectors_oracle()),
     sql_backed("moving_avg_throughput", _moving_avg_sql, ("events",)),
     sql_backed("resample_gapfill", _resample_gapfill_sql, ("events",)),
     sql_backed("ffill_features", _ffill_sql, ("events",)),

@@ -102,6 +102,7 @@ def test_ridge_cert_invariants_and_augmented_lstsq_parity(spark):
     from fiveg_spark.ml.certify import P_LAGS, RIDGE_LAMBDAS, ridge_cert
     from fiveg_spark.ml.features import feature_frame, robust_scale
     from fiveg_spark.ml.var import collect_gram, lag_design, normal_equations
+    from fiveg_spark.operators.kpi import kpi36
     from pyspark.sql import functions as F
 
     rows = _rows(ridge_cert(spark, SF_DIR))
@@ -113,7 +114,7 @@ def test_ridge_cert_invariants_and_augmented_lstsq_parity(spark):
     # independent algorithm: ridge via AUGMENTED least squares
     # [X; sqrt(lam) I] — lstsq, not a Gram solve — must agree with the
     # certified Gram-path coefficients
-    scaled, _ = robust_scale(feature_frame(spark, SF_DIR))
+    scaled, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
     design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train")
     gram = collect_gram(normal_equations(design))
     one = design.filter(F.col("slice") == sorted(gram)[0])
@@ -141,6 +142,7 @@ def test_var_order_cert_theorems_and_residual_parity(spark):
     )
     from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
     from fiveg_spark.ml.var import lag_design
+    from fiveg_spark.operators.kpi import kpi36
 
     rows = _rows(var_order_cert(spark, SF_DIR))
     assert len(rows) == 3 * len(ORDER_CANDIDATES)
@@ -165,7 +167,7 @@ def test_var_order_cert_theorems_and_residual_parity(spark):
     # independent algorithm: EXPLICIT residuals via lstsq on the
     # truncated design columns — ln|R'R/n| must match the Gram-identity
     # logdet (E = Y'Y - (X'Y)'B) the cert computes, per candidate order
-    scaled, _ = robust_scale(feature_frame(spark, SF_DIR))
+    scaled, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
     design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train")
     s0 = sorted(crits)[0]
     one = design.filter(F.col("slice") == s0)

@@ -12,12 +12,13 @@ from fiveg_spark.ml.hybrid import hybrid_eval
 from fiveg_spark.ml.model import forward, init_weights, predict_residuals
 from fiveg_spark.ml.sequences import sliding_sequences
 from fiveg_spark.ml.var import lag_design, normal_equations, solve_coefficients
+from fiveg_spark.operators.kpi import kpi36
 from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
 def scaled(spark):
-    df, _ = robust_scale(feature_frame(spark, SF_DIR))
+    df, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
     df.cache().count()
     return df
 
@@ -101,8 +102,35 @@ def test_hybrid_eval_surface(spark):
     assert all(r["n"] > 0 for r in rows)
 
 
+def _seq(jseq):
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _nodes(node):
+    yield node
+    for child in _seq(node.children()):
+        yield from _nodes(child)
+
+
+def test_feature_frame_prunes_kpi36_to_five_aggregates(spark):
+    """The forecast reads kpi36 through a projection: Catalyst must
+    prune the 31 unread KPIs, leaving ONE aggregation that computes
+    only the 5 formulas the features read (the plan the hourly CTE's
+    own aggregation had)."""
+    plan = feature_frame(kpi36(spark, SF_DIR))._jdf.queryExecution().optimizedPlan()
+    aggs = [n for n in _nodes(plan) if n.nodeName() == "Aggregate"]
+    assert len(aggs) == 1
+    funcs = [
+        e.aggregateFunction().prettyName()
+        for named in _seq(aggs[0].aggregateExpressions())
+        for e in _nodes(named)
+        if e.nodeName() == "AggregateExpression"
+    ]
+    assert sorted(funcs) == ["avg", "avg", "count", "stddev_samp", "sum"]
+
+
 def test_split_proportions(spark):
-    df = with_split(feature_frame(spark, SF_DIR))
+    df = with_split(feature_frame(kpi36(spark, SF_DIR)))
     counts = {
         (r["slice"], r["split"]): r["cnt"]
         for r in df.groupBy("slice", "split").agg(F.count("*").alias("cnt")).collect()
@@ -122,7 +150,7 @@ def test_holt_spark_matches_python_recursion(spark):
 
     got = {r["slice"]: r for r in holt_forecast(spark, SF_DIR).collect()}
     frame = (
-        feature_frame(spark, SF_DIR)
+        feature_frame(kpi36(spark, SF_DIR))
         .select("slice", "window_start", "throughput")
         .toPandas()
         .sort_values(["slice", "window_start"])
@@ -172,7 +200,7 @@ def test_holt_winters_matches_reference_and_beats_holt_on_seasonal(spark):
     from fiveg_spark.ml.features import feature_frame
 
     pdf = (
-        feature_frame(spark, SF_DIR)
+        feature_frame(kpi36(spark, SF_DIR))
         .select("slice", "window_start", "throughput")
         .orderBy("window_start")
         .toPandas()
@@ -196,7 +224,7 @@ def test_kalman_spark_matches_python_recursion(spark):
 
     got = {r["slice"]: r for r in kalman_level(spark, SF_DIR).collect()}
     frame = (
-        feature_frame(spark, SF_DIR)
+        feature_frame(kpi36(spark, SF_DIR))
         .select("slice", "window_start", "throughput")
         .toPandas()
         .sort_values(["slice", "window_start"])

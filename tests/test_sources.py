@@ -185,8 +185,9 @@ def test_streaming_parquet_sink(spark, tmp_path):
 
 
 def test_pcap_to_kpi_end_to_end(spark, tmp_path):
-    """The reference's full phase-2→3 shape: pcap bytes → decode →
-    canonical packets → 36-KPI windowed aggregation."""
+    """The reference's full phase-2→3→4 shape: pcap bytes → decode →
+    canonical packets → 36-KPI windowed aggregation → forecast
+    features."""
     from fiveg_spark.operators.kpi import kpi36_from_packets
     from fiveg_spark.sources.pcap import to_canonical_packets
 
@@ -215,6 +216,25 @@ def test_pcap_to_kpi_end_to_end(spark, tmp_path):
     assert sum(total.values()) == 24
     # zero-window TCP packets from flow B are visible in the health KPIs
     assert sum(r["Zero_Win_Count"] for r in rows) == 12
+
+    # ... → forecast features: the same hourly KPI frame feeds the hybrid
+    # (train.py FEATURE_MAP; its two sources missing from the KPIs are 0.0)
+    from fiveg_spark.ml.features import feature_frame
+
+    frows = feature_frame(kpis).collect()
+    assert len(frows) == 3
+    feats = {r["window_start"]: r for r in frows}
+    mapped = {
+        "throughput": "Throughput_bps",
+        "packets": "Total_Packets",
+        "jitter": "Jitter",
+        "latency": "Avg_IAT",
+        "congestion": "Avg_Win_Size",
+    }
+    for r in rows:
+        f = feats[r["window_start"]]
+        assert {k: f[k] for k in mapped} == {k: r[v] for k, v in mapped.items()}
+        assert f["reliability"] == f["complexity"] == 0.0
 
 
 def test_compact_shrinks_file_count(spark, tmp_path):
