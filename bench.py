@@ -118,22 +118,32 @@ def _ensure_sf1(sf1_dir: str) -> None:
     gen_sf1(sf1_dir)
 
 
+def _time_queries(spark, queries, names, sf_dir: str, label: str) -> dict[str, float]:
+    """Seconds to ``.count()`` each named query at ``sf_dir``: three
+    timed runs per query, keep the steady-state (min) rounded to ms.  The
+    first execution in this environment pays one-off JVM/page-fault
+    warm-up (and co-tenant load spikes) that a resident cluster service
+    would not see per-query."""
+    timings: dict[str, float] = {}
+    for name in names:
+        best = None
+        for _ in range(3):
+            t0 = time.time()
+            n = queries[name](spark, sf_dir).count()
+            dt = round(time.time() - t0, 3)
+            best = dt if best is None else min(best, dt)
+        timings[name] = best
+        print(f"{label}{name}: {n} rows in {best}s", file=sys.stderr)
+    return timings
+
+
 def _bench_scale_subset(spark, queries) -> dict | None:
     """Time SCALE_SUBSET at sf1 with the headline methodology (3 runs,
     keep min).  Never lets a failure here break the contract line."""
     sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1")
     try:
         _ensure_sf1(sf1_dir)
-        timings: dict[str, float] = {}
-        for name in SCALE_SUBSET:
-            best = None
-            for _ in range(3):
-                t0 = time.time()
-                n = queries[name](spark, sf1_dir).count()
-                dt = round(time.time() - t0, 3)
-                best = dt if best is None else min(best, dt)
-            timings[name] = best
-            print(f"# sf1 {name}: {n} rows in {timings[name]}s", file=sys.stderr)
+        timings = _time_queries(spark, queries, SCALE_SUBSET, sf1_dir, "# sf1 ")
         return {
             "metric": "scale_subset_sf1",
             "value": round(sum(timings.values()), 3),
@@ -158,20 +168,7 @@ def main() -> None:
     spark.range(1).count()  # pay JVM startup outside the timings
 
     queries = contract.queries()
-    timings: dict[str, float] = {}
-    # three timed runs per query, keep the steady-state (min): the first
-    # execution in this environment pays one-off JVM/page-fault warm-up
-    # (and co-tenant load spikes) that a resident cluster service would
-    # not see per-query
-    for name in HEADLINE:
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            n = queries[name](spark, sf_dir).count()
-            dt = round(time.time() - t0, 3)
-            best = dt if best is None else min(best, dt)
-        timings[name] = best
-        print(f"# {name}: {n} rows in {timings[name]}s", file=sys.stderr)
+    timings = _time_queries(spark, queries, HEADLINE, sf_dir, "# ")
 
     # sf1 subset only alongside the real (sf>=0.1) headline run — a
     # smoke bench at sf0.001/sf0.01 should stay a smoke bench

@@ -373,8 +373,8 @@ def _unpivot_sql(d: str) -> str:
 def _skew_profile_sql(d: str) -> str:
     # C57 — shuffle-key skew diagnostic: the distribution of per-key row
     # counts for the keys the heavy operators shuffle on.  This is the
-    # measurement half of functions/skew.py's salting — run it BEFORE
-    # choosing salting/AQE-skew thresholds.  Top-key share and the
+    # measurement that tells when C62's salting (salted_agg_throughput)
+    # pays — run it BEFORE choosing salting/AQE-skew thresholds.  Top-key share and the
     # max/median ratio are the two numbers that decide whether a 100 TB
     # shuffle on this key stalls its biggest task.  One hash-agg per key
     # column + tiny summary aggs over the per-key frames.

@@ -220,12 +220,6 @@ QUERIES = [
 # TCP seq/flags/window, slice routing via marker subdirs).
 # --------------------------------------------------------------------------
 
-_WRT_COLS = (
-    "slice_type", "protocol", "n_pkts", "sum_pktlen", "sum_captured",
-    "sum_ts_ms", "n_src_ports", "n_src_ips", "sum_flags", "sum_win",
-    "sum_seq",
-)
-
 # the closed-form event_id/user_id → packet-field mapping, written
 # once as (spark_sql, duckdb) shared ANSI fragments
 _WRT_MAP = {

@@ -158,9 +158,10 @@ def _countmin_sql(d: str) -> str:
         for i in range(1, 9)
     )
     hash_bucket = f"CAST(CAST(({digits}) AS BIGINT) % {CM_WIDTH} AS BIGINT)"
+    rows = ", ".join(f"({r})" for r in range(CM_DEPTH))
     return f"""
     WITH toks AS ({explode}),
-    rows_r(r) AS (VALUES (0), (1), (2), (3)),
+    rows_r(r) AS (VALUES {rows}),
     hashed AS (
       SELECT term, r, {hash_bucket} AS bucket
       FROM toks CROSS JOIN rows_r

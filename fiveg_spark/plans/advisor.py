@@ -141,10 +141,3 @@ def lint_plan(df: DataFrame, shuffle_budget: int = 6) -> list[Finding]:
         )
 
     return findings
-
-
-def lint_report(df: DataFrame) -> str:
-    fs = lint_plan(df)
-    if not fs:
-        return "plan clean"
-    return "\n".join(f"[{f.severity}] {f.rule}: {f.detail}" for f in fs)

@@ -10,7 +10,8 @@ every later equi-join on the key plans as a sort-merge join with ZERO
 Exchange on either side.  At 100 TB this converts the workload's
 dominant recurring shuffle (re-paid per query, per day, forever) into a
 one-off write cost; it is the static sibling of AQE's runtime
-re-planning and the storage-side counterpart of `functions/skew.py`.
+re-planning and the storage-side counterpart of salting
+(`salted_agg_throughput`).
 
 Spark mechanics this module encodes so callers don't have to re-learn
 them:

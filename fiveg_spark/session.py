@@ -19,7 +19,9 @@ def default_shuffle_partitions() -> int:
     embed an explicit REPARTITION count (dedup's pre-hash rebalance) so
     the hint can never diverge from spark.sql.shuffle.partitions."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
-    default = max(8, int(cpus) if cpus.isdigit() else 8)
+    if not cpus.isdigit():
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a core count, got {cpus!r}")
+    default = max(8, int(cpus))
     return int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(default)))
 
 

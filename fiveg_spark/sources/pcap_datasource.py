@@ -45,8 +45,7 @@ from fiveg_spark.sources.pcap import (
     infer_slice,
 )
 
-# PACKET_SCHEMA column positions the pushdowns act on
-_SLICE_IDX = 0
+# PACKET_SCHEMA column position the protocol pushdown acts on
 _PROTOCOL_IDX = 6
 
 

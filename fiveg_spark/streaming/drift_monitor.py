@@ -1,9 +1,8 @@
 """Streaming PSI drift monitor: the STREAMING twin of D27
 (operators/ts_diagnostics.py:_psi_parts) — every micro-batch of a value
 stream is scored against a FROZEN reference distribution and the
-Population Stability Index lands in a metrics sink, so a dashboard (or
-the breaker in plans/observe.py) can alert the moment production data
-walks away from the training era.
+Population Stability Index lands in a metrics sink, so a dashboard can
+alert the moment production data walks away from the training era.
 
 Design:
 - the reference is fit ONCE from a batch frame (`fit_reference`):
@@ -85,13 +84,6 @@ def fit_reference(
             "p": [max(x / tot, FLOOR) for x in e["c"]],
         }
     return ref
-
-
-def _bin_of(v: float, lo: float, hi: float, n_bins: int) -> int:
-    if hi - lo <= 0:
-        return 0
-    b = int((v - lo) / ((hi - lo) / n_bins))
-    return min(n_bins - 1, max(0, b))
 
 
 def foreach_batch_psi(

@@ -1,75 +1,14 @@
-"""Scale-utility tests: salted aggregation ≡ direct aggregation, and
-bucketed tables join without an exchange."""
+"""Scale-utility tests: bucketed tables join without an exchange, and
+partitioned facts prune at runtime."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fiveg_spark.functions.skew import salted_agg, skew_stats, with_salt
 from fiveg_spark.plans.explain import plan_facts
 from fiveg_spark.sources.sinks import write_bucketed
 from fiveg_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
-
-
-def test_salted_agg_equals_direct_agg(spark):
-    ev = load_table(spark, "events", SF_DIR)
-    direct = {
-        r["event_type"]: r
-        for r in ev.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("total"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-        )
-        .collect()
-    }
-    salted = {
-        r["event_type"]: r
-        for r in salted_agg(
-            ev,
-            keys=["event_type"],
-            partial_aggs={
-                "n": F.count("*"),
-                "total": F.sum("value"),
-                "mn": F.min("value"),
-                "mx": F.max("value"),
-            },
-            merge_aggs={
-                "n": F.sum("n"),
-                "total": F.sum("total"),
-                "mn": F.min("mn"),
-                "mx": F.max("mx"),
-            },
-            unique_col="event_id",
-            n_salts=8,
-        ).collect()
-    }
-    assert set(direct) == set(salted)
-    for k in direct:
-        assert direct[k]["n"] == salted[k]["n"]
-        assert abs(direct[k]["total"] - salted[k]["total"]) < 1e-6 * abs(direct[k]["total"])
-        assert direct[k]["mn"] == salted[k]["mn"]
-        assert direct[k]["mx"] == salted[k]["mx"]
-
-
-def test_salt_spreads_hot_key(spark):
-    ev = load_table(spark, "events", SF_DIR)
-    salted = with_salt(ev, "event_id", n_salts=8)
-    per_salt = (
-        salted.groupBy("__salt").count().collect()
-    )
-    assert len(per_salt) == 8  # every salt bucket hit
-    counts = [r["count"] for r in per_salt]
-    assert max(counts) < 2 * min(counts), "salt distribution badly skewed"
-
-
-def test_skew_stats_surface(spark):
-    ev = load_table(spark, "events", SF_DIR)
-    row = skew_stats(ev, ["user_id"]).collect()[0]
-    assert row["n_keys"] > 0 and row["max_rows"] >= row["median_rows"]
-    assert row["skew_ratio"] >= 1.0
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

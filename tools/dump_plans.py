@@ -1,9 +1,8 @@
 """Dump `.explain("formatted")` for named queries to plans/<round>/ (guide §1.3).
 
-Unlike profile_headline.py this runs NO timed actions — it builds each
-DataFrame via the contract (materialized_backed parts still execute
-their eager localCheckpoint jobs, so keep sf small unless plan sizes
-matter) and writes plans/<round>/<name>_<tag>.txt plus a one-line feature
+It runs NO timed actions — it builds each DataFrame via the contract
+(materialized_backed parts still execute their eager localCheckpoint
+jobs, so keep sf small unless plan sizes matter) and writes plans/<round>/<name>_<tag>.txt plus a one-line feature
 count to stderr.  <round> is $SPARK_GRAFT_PLANS_ROUND (default r14).
 
 Usage: python tools/dump_plans.py <tag> <query> [query ...]
@@ -19,7 +18,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as contract
 from fiveg_spark.session import get_spark
-from tools.profile_headline import PLAN_FEATURES
+
+PLAN_FEATURES = {
+    "n_exchange": r"\bExchange\b",
+    "n_sort": r"\+- Sort\b|^\s*Sort\b",
+    "n_smj": r"SortMergeJoin",
+    "n_bhj": r"BroadcastHashJoin",
+    "n_shj": r"ShuffledHashJoin",
+    "n_bnlj": r"BroadcastNestedLoopJoin",
+    "n_cartesian": r"CartesianProduct",
+    "n_python": r"BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas",
+    "n_scan": r"Scan parquet|FileScan",
+    "n_aqe": r"AdaptiveSparkPlan",
+}
 
 
 def main() -> None:
