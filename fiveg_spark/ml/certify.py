@@ -1,5 +1,5 @@
 """Driver-certifiable invariant rows for the iterative-ML block
-(SURVEY §2 D6/D8/D9/D12/D15/D17/D18/D19).
+(SURVEY §2 D6/D8/D9/D12/D15/D17/D18/D19/D44/D49).
 
 These fits (normal-equation VAR, IRLS Huber, MLlib LR/PCA/isotonic,
 GRU forward, Adam-trained hybrid) are not SQL-reproducible, so their
@@ -15,6 +15,9 @@ Invariants certified (all are theorems about the exact optimum, with
 float tolerances):
 - VAR OLS:    XᵀX·B = XᵀY (normal equations), and fitted SSE ≤
               intercept-only SSE per equation (nested-model bound).
+              The VAR, ridge and lag-order certs read n, Σy and YᵀY
+              off the one collected Gram of [X | Y] (ml/var.py), so
+              each is a single distributed pass.
 - Huber IRLS: ∇L ≈ 0 at the converged β (fixed point), and
               L(β_huber) ≤ L(β_ols) (β_huber minimizes L).
 - MLlib LR:   0 ≤ train R² ≤ 1 and RMSE ≤ stddev_pop(y) (intercept
@@ -45,24 +48,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
+from fiveg_spark.ml.var import collect_gram, lag_design, normal_equations, ridge_solve
 from fiveg_spark.operators.kpi import kpi36
 from fiveg_spark.operators.timeseries import _hourly_cte
+from fiveg_spark.plans.plan_ledger import note_precollect
 from fiveg_spark.plans.registry import Query
 
 P_LAGS = 3
 N_TERMS = len(FEATURES) * P_LAGS + 1  # intercept + k*p lag terms
 GRU_SAMPLE = 64
 
-
-
-def _noted(df):
-    """Chain-preserving ledger hook: fingerprint the distributed frame
-    about to be collected (plans/plan_ledger.note_precollect) — no-op
-    outside a ledger capture pass."""
-    from fiveg_spark.plans.plan_ledger import note_precollect
-
-    note_precollect(df)
-    return df
 
 def _counted_cte() -> str:
     return f"""{_hourly_cte("duckdb")},
@@ -74,49 +69,34 @@ def _counted_cte() -> str:
 # --------------------------------------------------------------------------
 
 
-def var_ols_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fiveg_spark.ml.var import collect_gram, lag_design, normal_equations
-
+def _train_gram(spark: SparkSession, sf_dir: str) -> dict:
+    """{slice: (XᵀX, XᵀY, YᵀY)} of the VAR(P_LAGS) train design: one
+    distributed Gram pass, noted for the plan ledger.  XᵀX[0, 0] is n
+    and XᵀY[0] is Σy (the intercept column), so the certs below read
+    every target moment they need from it."""
     scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
-    design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train").persist()
-    try:
-        gram = collect_gram(normal_equations(design))
-        k = len(FEATURES)
-        ystats = (
-            design.groupBy("slice")
-            .agg(
-                F.count("*").alias("n"),
-                F.array(
-                    *[F.sum(F.element_at("y", f + 1)) for f in range(k)]
-                ).alias("sy"),
-                F.array(
-                    *[
-                        F.sum(F.element_at("y", f + 1) * F.element_at("y", f + 1))
-                        for f in range(k)
-                    ]
-                ).alias("syy"),
-            )
-            .transform(_noted).collect()
-        )
-    finally:
-        design.unpersist()
+    design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train")
+    return collect_gram(normal_equations(design).transform(note_precollect))
+
+
+def var_ols_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
-    for r in sorted(ystats, key=lambda r: r["slice"]):
-        xtx, xty = gram[r["slice"]]
-        B = np.linalg.solve(xtx + 1e-9 * np.eye(xtx.shape[0]), xty)
+    for slice_name, (xtx, xty, yty) in sorted(_train_gram(spark, sf_dir).items()):
+        n = int(xtx[0, 0])
+        B = ridge_solve(xtx, xty)
         resid = float(np.abs(xtx @ B - xty).max())
         normal_ok = resid <= 1e-6 * max(1.0, float(np.abs(xty).max()))
         beats = True
-        for f in range(k):
+        for f in range(len(FEATURES)):
             sse_fit = (
-                r["syy"][f]
+                yty[f, f]
                 - 2.0 * float(B[:, f] @ xty[:, f])
                 + float(B[:, f] @ xtx @ B[:, f])
             )
-            sse_mean = r["syy"][f] - r["sy"][f] ** 2 / r["n"]
+            sse_mean = yty[f, f] - xty[0, f] ** 2 / n
             if sse_fit > sse_mean + 1e-6 * max(1.0, abs(sse_mean)):
                 beats = False
-        rows.append((r["slice"], r["n"], xtx.shape[0], bool(normal_ok), beats))
+        rows.append((slice_name, n, xtx.shape[0], bool(normal_ok), beats))
     return spark.createDataFrame(
         rows,
         "slice string, n_obs long, n_terms long, "
@@ -202,7 +182,7 @@ def huber_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("loss_hub").alias("loss_hub"),
                 F.sum("loss_ols").alias("loss_ols"),
             )
-            .transform(_noted).collect()
+            .transform(note_precollect).collect()
         )
     finally:
         design.unpersist()
@@ -265,7 +245,7 @@ def linear_baseline_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         lr = model.stages[-1]
         stats = part.agg(
             F.count("*").alias("n"), F.stddev_pop("y").alias("sd")
-        ).transform(_noted).head()
+        ).transform(note_precollect).head()
         r2 = float(lr.summary.r2)
         rmse = float(lr.summary.rootMeanSquaredError)
         sd = float(stats["sd"] or 0.0)
@@ -330,7 +310,7 @@ def pca_cert(spark: SparkSession, sf_dir: str, k: int = 4) -> DataFrame:
                 for d in range(dim)
             ],
         )
-        .transform(_noted).head()
+        .transform(note_precollect).head()
     )
     total = sum(stats[f"vd{d}"] for d in range(dim))
     pc1_ratio_ok = bool(abs(stats["v1"] / total - ratios[0]) <= 1e-4)
@@ -369,7 +349,7 @@ def isotonic_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.pow(F.col("actual") - F.col("prediction"), 2)).alias("sse_cal"),
         F.sum("actual").alias("sa"),
         F.sum("prediction").alias("sp"),
-    ).transform(_noted).head()
+    ).transform(note_precollect).head()
     mse_improves = bool(
         agg["sse_cal"] <= agg["sse_raw"] + 1e-6 * max(1.0, agg["sse_raw"])
     )
@@ -427,14 +407,14 @@ def gru_forward_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
             seqs.orderBy("slice", "window_start")
             .limit(GRU_SAMPLE)
             .select("slice", "window_start", "seq")
-            .transform(_noted).collect()
+            .transform(note_precollect).collect()
         )
         dist = {
             (r["slice"], r["window_start"]): r["resid_pred"]
             for r in preds.orderBy("slice", "window_start")
             .limit(GRU_SAMPLE)
             .select("slice", "window_start", "resid_pred")
-            .transform(_noted).collect()
+            .transform(note_precollect).collect()
         }
         max_diff = 0.0
         for r in sample:
@@ -712,10 +692,11 @@ RIDGE_LAMBDAS = (0.1, 1.0, 10.0)
 def ridge_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D44 — ridge regression over the D6 VAR lag design at a λ ladder
     (Hoerl & Kennard 1970): B_λ = (XᵀX + λI)⁻¹XᵀY from the SAME
-    distributed Gram matrices D6 already certifies (zero extra scans —
-    the regularization path is pure driver-side linear algebra on the
-    collected k·p+1-square sums, the whole point of the Gram
-    formulation at 100 TB).  Full-matrix penalty (intercept included),
+    distributed Gram of [X | Y] D6 certifies, in ONE pass — the
+    regularization path and the SSEs (YᵀY is the Gram's target block)
+    are pure driver-side linear algebra on the collected (k·p+1+k)²
+    sums, the whole point of the Gram formulation at 100 TB.
+    Full-matrix penalty (intercept included),
     so every invariant below is an exact theorem of the computed
     objective J_λ(B) = SSE(B) + λ‖B‖²_F:
 
@@ -727,28 +708,6 @@ def ridge_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle recomputes n_obs per slice from raw events (the strong
     data-dependent half, as for D6) and states the theorems as TRUE."""
-    from fiveg_spark.ml.var import collect_gram, lag_design, normal_equations
-
-    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
-    design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train").persist()
-    try:
-        gram = collect_gram(normal_equations(design))
-        k = len(FEATURES)
-        ystats = (
-            design.groupBy("slice")
-            .agg(
-                F.count("*").alias("n"),
-                F.array(
-                    *[
-                        F.sum(F.element_at("y", f + 1) * F.element_at("y", f + 1))
-                        for f in range(k)
-                    ]
-                ).alias("syy"),
-            )
-            .transform(_noted).collect()
-        )
-    finally:
-        design.unpersist()
 
     def sse_total(xtx, xty, syy, B):
         return float(
@@ -760,20 +719,20 @@ def ridge_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     rows = []
-    for r in sorted(ystats, key=lambda rr: rr["slice"]):
-        xtx, xty = gram[r["slice"]]
+    for slice_name, (xtx, xty, yty) in sorted(_train_gram(spark, sf_dir).items()):
+        syy = np.diag(yty)
         eye = np.eye(xtx.shape[0])
-        b_ols = np.linalg.solve(xtx + 1e-9 * eye, xty)
-        sse_ols = sse_total(xtx, xty, r["syy"], b_ols)
+        b_ols = ridge_solve(xtx, xty)
+        sse_ols = sse_total(xtx, xty, syy, b_ols)
         norm_ols = float(np.sum(b_ols * b_ols))
         prev_norm = norm_ols
         for lam in RIDGE_LAMBDAS:
-            b_lam = np.linalg.solve(xtx + lam * eye, xty)
+            b_lam = ridge_solve(xtx, xty, lam)
             resid = float(np.abs((xtx + lam * eye) @ b_lam - xty).max())
             solve_ok = resid <= 1e-6 * max(1.0, float(np.abs(xty).max()))
             norm_lam = float(np.sum(b_lam * b_lam))
             shrink_ok = norm_lam <= prev_norm + 1e-9 * max(1.0, prev_norm)
-            sse_lam = sse_total(xtx, xty, r["syy"], b_lam)
+            sse_lam = sse_total(xtx, xty, syy, b_lam)
             tol = 1e-6 * max(1.0, abs(sse_ols))
             objective_ok = (sse_lam + lam * norm_lam
                             <= sse_ols + lam * norm_ols + tol)
@@ -781,9 +740,9 @@ def ridge_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
             prev_norm = norm_lam
             rows.append(
                 (
-                    r["slice"],
+                    slice_name,
                     float(lam),
-                    r["n"],
+                    int(xtx[0, 0]),
                     xtx.shape[0],
                     bool(solve_ok),
                     bool(shrink_ok),
@@ -820,7 +779,6 @@ ORDER BY slice, lambda
 """
 
 
-
 # --------------------------------------------------------------------------
 # D49: VAR lag-order selection (AIC/BIC over nested Gram sub-blocks)
 # --------------------------------------------------------------------------
@@ -828,59 +786,19 @@ ORDER BY slice, lambda
 ORDER_CANDIDATES = (1, 2, 3)
 
 
-_ORDER_CACHE: dict = {}
-
-
 def _order_criteria(spark: SparkSession, sf_dir: str):
     """One fit, shared by the cert rows and the selection surface:
-    per slice -> (n, {p: (aic, bic, sse, logdet, m_params)}).
-
-    Memoized per (session, sf_dir): var_order_cert followed by
-    select_var_order — the documented pairing — must not pay the
-    feature scan + lag design + Gram collect twice for identical
-    results (the r7 self-review measured exactly that).  The testdata
-    directories are immutable; a caller recomputing over mutated data
-    clears _ORDER_CACHE explicitly."""
-    key = (id(spark), sf_dir)
-    if key in _ORDER_CACHE:
-        return _ORDER_CACHE[key]
-    from fiveg_spark.ml.var import collect_gram, lag_design, normal_equations
-
-    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
-    design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train").persist()
+    per slice -> (n, {p: (aic, bic, sse, logdet, m_params)})."""
     k = len(FEATURES)
-    try:
-        gram = collect_gram(normal_equations(design))
-        yty_stats = (
-            design.groupBy("slice")
-            .agg(
-                F.count("*").alias("n"),
-                *[
-                    F.sum(
-                        F.element_at("y", i + 1) * F.element_at("y", j + 1)
-                    ).alias(f"yy_{i}_{j}")
-                    for i in range(k)
-                    for j in range(i, k)
-                ],
-            )
-            .transform(_noted).collect()
-        )
-    finally:
-        design.unpersist()
     out = {}
-    for r in yty_stats:
-        xtx, xty = gram[r["slice"]]
-        n = int(r["n"])
-        yty = np.zeros((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                yty[i, j] = yty[j, i] = r[f"yy_{i}_{j}"]
+    for slice_name, (xtx, xty, yty) in _train_gram(spark, sf_dir).items():
+        n = int(xtx[0, 0])
         crits = {}
         for p in ORDER_CANDIDATES:
             m_terms = k * p + 1
             sub_xtx = xtx[:m_terms, :m_terms]
             sub_xty = xty[:m_terms]
-            B = np.linalg.solve(sub_xtx + 1e-9 * np.eye(m_terms), sub_xty)
+            B = ridge_solve(sub_xtx, sub_xty)
             E = yty - sub_xty.T @ B
             E = 0.5 * (E + E.T)  # numerical symmetrization
             sse = float(np.trace(E))
@@ -892,8 +810,7 @@ def _order_criteria(spark: SparkSession, sf_dir: str):
             aic = logdet + 2.0 * m_params / max(n, 1)
             bic = logdet + np.log(max(n, 2)) * m_params / max(n, 1)
             crits[p] = (aic, bic, sse, logdet, m_params)
-        out[r["slice"]] = (n, crits)
-    _ORDER_CACHE[key] = out
+        out[slice_name] = (n, crits)
     return out
 
 
@@ -905,9 +822,9 @@ def var_order_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     are comparable across p — and then every candidate order's Gram
     matrix is a LEADING SUB-BLOCK of the p=3 Gram D6 already computes
     (column order is intercept, lag-1 block, ..., lag-p block), so the
-    whole sweep costs ZERO extra scans beyond one Y'Y aggregate over
-    the same persisted design (the ridge_cert doctrine: the model
-    ladder is driver-side linear algebra on collected sums).
+    whole sweep is ONE Gram pass: Y'Y is the Gram's target block and
+    n its intercept cell (the ridge_cert doctrine: the model ladder is
+    driver-side linear algebra on collected sums).
 
     Criteria per (slice, p): residual cross-covariance E_p = Y'Y −
     (X'Y)'B_p (exact at the normal-equation solution), AIC = ln|E_p/n|
@@ -1043,7 +960,7 @@ def _granger_rows(spark: SparkSession, sf_dir: str) -> list:
         FROM grid g JOIN complete c ON c.h = g.h
         ORDER BY g.h, g.slice
         """
-    ).transform(_noted).collect()  # bounded: hours x slices rows, calendar-sized
+    ).transform(note_precollect).collect()  # bounded: hours x slices rows, calendar-sized
     series: dict[str, list[float]] = {}
     hours: list = []
     for r in pivot:

@@ -9,10 +9,11 @@ model itself by minimizing the pinball loss
 
 IRLS formulation: ρ_τ(r) = w(r)·r²/2 with w(r) = 2·(τ·1[r>0] +
 (1−τ)·1[r≤0]) / max(|r|, ε), so each round solves weighted normal
-equations exactly like the Huber loop — the previous β broadcasts,
-each Arrow batch emits its m×m partial XᵀWX/XᵀWy, and ONLY those
-partials shuffle (the ml/var.py layout; ε-smoothing is the standard
-IRLS regularization for the kink at r = 0).
+equations in the same loop as the Huber fit (`ml/var.py:irls_fit`) —
+the previous β broadcasts, each Arrow batch emits its partial
+XᵀWX/XᵀWy cells, and ONLY those partials shuffle.  This module
+contributes only the weight rule (ε-smoothing is the standard IRLS
+regularization for the kink at r = 0).
 
 Certification (the huber_cert pattern — theorem-level invariants over
 the REAL distributed fit + oracle-recomputed counts):
@@ -30,7 +31,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fiveg_spark.ml.huber import _PARTIAL_SCHEMA, _solve, scalar_design
+from fiveg_spark.ml.huber import scalar_design
+from fiveg_spark.ml.var import irls_fit
+from fiveg_spark.plans.plan_ledger import note_precollect
 
 TAU = 0.9
 # Smoothing bandwidth: this is CONVOLUTION-SMOOTHED quantile regression
@@ -47,51 +50,6 @@ ITERS = 80
 RIDGE = 1e-6  # rank-deficient tiny-SF designs need more than 1e-9
 
 
-
-def _noted(df):
-    """Chain-preserving ledger hook (plans/plan_ledger.note_precollect):
-    no-op outside a ledger capture pass."""
-    from fiveg_spark.plans.plan_ledger import note_precollect
-
-    note_precollect(df)
-    return df
-
-def _qr_weight_kernel(betas: dict[str, np.ndarray] | None, tau: float, kappa: float):
-    """mapInPandas kernel: one partial weighted Gram per (batch, slice)
-    with pinball IRLS weights; betas=None → unit weights (OLS start)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            for slice_name, g in pdf.groupby("slice"):
-                X = np.asarray(list(g["x"]), dtype=np.float64)
-                y = np.asarray(g["y_t"], dtype=np.float64)
-                if betas is None or slice_name not in betas:
-                    w = np.ones(len(y))
-                else:
-                    r = y - X @ betas[slice_name]
-                    side = np.where(r > 0, tau, 1.0 - tau)
-                    w = side / np.maximum(np.abs(r), kappa)
-                Xw = X * w[:, None]
-                xwx = X.T @ Xw
-                xwy = Xw.T @ y
-                m = xwx.shape[0]
-                ii, jj = np.meshgrid(np.arange(m), np.arange(m), indexing="ij")
-                yield pd.DataFrame(
-                    {
-                        "slice": slice_name,
-                        "i": ii.ravel().astype(np.int32),
-                        "j": jj.ravel().astype(np.int32),
-                        "xwx": xwx.ravel(),
-                        "xwy": [
-                            xwy[i] if j == 0 else 0.0
-                            for i, j in zip(ii.ravel(), jj.ravel())
-                        ],
-                    }
-                )
-
-    return kernel
-
-
 def quantile_fit(
     design: DataFrame,
     tau: float = TAU,
@@ -101,21 +59,11 @@ def quantile_fit(
 ) -> dict[str, np.ndarray]:
     """IRLS over a (slice, x: array, y_t: double) design frame;
     returns {slice: β}.  Early-stops at the IRLS fixed point."""
-    design = design.select("slice", "x", "y_t")
-    betas: dict[str, np.ndarray] | None = None
-    for _ in range(iters):
-        partials = design.mapInPandas(
-            _qr_weight_kernel(betas, tau, eps), schema=_PARTIAL_SCHEMA
-        )
-        prev = betas
-        betas = _solve(partials, ridge=RIDGE)
-        if tol is not None and prev is not None and set(prev) == set(betas):
-            moved = max(
-                float(np.max(np.abs(betas[s] - prev[s]))) for s in betas
-            )
-            if moved <= tol:
-                break
-    return betas
+
+    def weight(r):
+        return np.where(r > 0, tau, 1.0 - tau) / np.maximum(np.abs(r), eps)
+
+    return irls_fit(design, weight, iters, tol, RIDGE)
 
 
 def _qr_cert_kernel(bq, bo, tau, eps):
@@ -191,7 +139,7 @@ def quantile_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
                     *[F.sum(F.element_at("absx", t + 1)) for t in range(m)]
                 ).alias("absx"),
             )
-            .transform(_noted).collect()
+            .transform(note_precollect).collect()
         )
     finally:
         design.unpersist()

@@ -24,20 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fiveg_spark.plans.plan_ledger import note_precollect
 from fiveg_spark.plans.registry import Query
 
 K = 10
 RECALL_FLOOR = 0.5
 
-
-
-def _noted(df):
-    """Chain-preserving ledger hook (plans/plan_ledger.note_precollect):
-    no-op outside a ledger capture pass."""
-    from fiveg_spark.plans.plan_ledger import note_precollect
-
-    note_precollect(df)
-    return df
 
 def _methods():
     from fiveg_spark.ml.mllib_models import mllib_ann_topk
@@ -159,7 +151,7 @@ def probe_ladder_hits(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]
     exact = _exact_topk_ids(spark, sf_dir)
     out = []
     for p in PROBE_LADDER:
-        cand = _noted(assigned.filter(
+        cand = note_precollect(assigned.filter(
             F.col("list_id").isin(order[:p]) & (F.col("vec_id") != 0)
         ).select("vec_id").distinct())
         out.append((p, cand.join(F.broadcast(exact), "vec_id").count()))
@@ -227,9 +219,9 @@ def rerank_ladder_hits(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]
         for r in pq_query_adc(spark, sf_dir, query_vec_id=0)
         .orderBy(F.asc("adc_d2"), F.asc("vec_id"))
         .limit(RERANK_LADDER[-1])
-        .transform(_noted).collect()
+        .transform(note_precollect).collect()
     ]
-    exact = {int(r["vec_id"]) for r in _noted(_exact_topk_ids(spark, sf_dir)).collect()}
+    exact = {int(r["vec_id"]) for r in note_precollect(_exact_topk_ids(spark, sf_dir)).collect()}
     return [
         (s, len(exact.intersection(deepest[:s]))) for s in RERANK_LADDER
     ]

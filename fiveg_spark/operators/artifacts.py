@@ -34,6 +34,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fiveg_spark.plans.plan_ledger import collected, note_precollect
 from fiveg_spark.plans.registry import Query, ensure_views
 
 N_WAVES = 4
@@ -41,23 +42,6 @@ N_WAVES = 4
 
 def _scratch() -> str:
     return tempfile.mkdtemp(prefix="fiveg_artifacts_")
-
-
-def _noted(df: DataFrame) -> DataFrame:
-    """Chain-preserving ledger hook (plans/plan_ledger.note_precollect):
-    no-op outside a ledger capture pass."""
-    from fiveg_spark.plans.plan_ledger import note_precollect
-
-    note_precollect(df)
-    return df
-
-
-def _collected(spark: SparkSession, df: DataFrame, schema: str) -> DataFrame:
-    from fiveg_spark.plans.plan_ledger import note_precollect
-
-    note_precollect(df)  # ledger capture of the distributed pre-collect plan
-    rows = [tuple(r) for r in df.collect()]
-    return spark.createDataFrame(rows, schema)
 
 
 # --------------------------------------------------------------------------
@@ -90,7 +74,7 @@ def _time_travel_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = []
         prev_rows = 0
         for v in versions:
-            agg = _noted(snapshots.read_as_of(spark, table, v).agg(
+            agg = note_precollect(snapshots.read_as_of(spark, table, v).agg(
                 F.count("*").alias("n"),
                 F.sum("n_chars").alias("chars"),
                 F.countDistinct("source").alias("srcs"),
@@ -174,7 +158,7 @@ def _cache_served_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(bool(hit)).alias("served_from_cache"),
             F.lit(bool(miss_discriminated)).alias("other_plan_missed"),
         ).orderBy("event_type", "day")
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, day LONG, n_events LONG,"
@@ -268,7 +252,7 @@ def _postings_lookup_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("term")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "term STRING, df LONG, total_tf LONG, max_tf LONG,"
@@ -380,7 +364,7 @@ def _backfill_audit_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("slice")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "slice STRING, n_days LONG, n_windows LONG,"
@@ -470,7 +454,7 @@ def _compaction_parity_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, n_events LONG, n_days LONG, n_users LONG,"
@@ -559,7 +543,7 @@ def _evolution_read_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
             F.lit(len(quarantined)).cast("long").alias("n_quarantined"),
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "n_rows LONG, n_null_user LONG, n_null_type LONG,"
@@ -628,7 +612,7 @@ def _rollback_audit_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         rows = []
         for v in (1, 2, head):
-            agg = _noted(snapshots.read_as_of(spark, table, v).agg(
+            agg = note_precollect(snapshots.read_as_of(spark, table, v).agg(
                 F.count("*").alias("n"),
                 F.sum("n_chars").alias("chars"),
             )).head()
@@ -703,7 +687,7 @@ def _zorder_parity_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, n_events LONG, n_users LONG, id_sum LONG,"
@@ -746,7 +730,7 @@ def _manifest_audit_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest.write_with_manifest(orders.repartition(4), table)
         ok, _msg = manifest.verify_manifest(table)
         loaded = manifest.load_verified(spark, table)
-        agg = _noted(loaded.groupBy("o_orderpriority").agg(
+        agg = note_precollect(loaded.groupBy("o_orderpriority").agg(
             F.count("*").alias("n_orders"),
             F.round(F.sum("o_totalprice") / 1e6 + 1e-9, 4).alias(
                 "total_value_m"
@@ -844,7 +828,7 @@ def _bucketed_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("first_type")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "first_type STRING, n_rows LONG, n_users LONG,"
@@ -964,7 +948,7 @@ def _cdc_apply_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("status")
         )
-        return _collected(
+        return collected(
             spark, out,
             "status STRING, n_rows LONG, sum_price_m DOUBLE,"
             " n_inserted LONG",
@@ -1097,7 +1081,7 @@ def _stream_cdc_apply_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("status")
         )
-        return _collected(
+        return collected(
             spark, out,
             "status STRING, n_rows LONG, sum_price_m DOUBLE,"
             " n_inserted LONG",
@@ -1152,9 +1136,9 @@ def _vacuum_audit_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        min_age_hours=1.0))
         n_aged = len(snapshots.vacuum(table, keep_versions=2,
                                       min_age_hours=0.0))
-        v1 = _noted(snapshots.read_as_of(spark, table, 1).agg(
+        v1 = note_precollect(snapshots.read_as_of(spark, table, 1).agg(
             F.count("*").alias("n"), F.sum("n_chars").alias("c"))).head()
-        head = _noted(spark.read.parquet(table).agg(
+        head = note_precollect(spark.read.parquet(table).agg(
             F.count("*").alias("n"), F.sum("n_chars").alias("c"))).head()
         return spark.createDataFrame(
             [(int(n_young), int(n_aged), int(v1["n"]), int(v1["c"]),
@@ -1264,7 +1248,7 @@ def _shard_layout_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("shard")
         )
         # bounded (<=16 rows): materialize before the scratch vanishes
-        return _collected(
+        return collected(
             spark, out,
             "shard LONG, n_docs LONG, sum_doc_id LONG, first_key STRING",
         )
@@ -1350,7 +1334,7 @@ def _partitioned_sink_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r["event_type"], int(r["n_events"]), float(r["sum_value_m"]),
              len(dirs), int(pruned["n"]),
              float(round(pruned["v"] / 1e6 + 1e-9, 4) + 0.0))
-            for r in _noted(back).collect()
+            for r in note_precollect(back).collect()
         ]
         return spark.createDataFrame(
             rows,
@@ -1455,7 +1439,7 @@ def _stream_agg_merge_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("status")
         )
-        return _collected(
+        return collected(
             spark, out,
             "status STRING, n_rows LONG, sum_price_m DOUBLE,"
             " avg_price_k DOUBLE",

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fiveg_spark.functions.stats import pop_kurtosis_sql, pop_skewness_sql
-from fiveg_spark.plans.registry import cnt, dbl, distinct_cnt, pct
+from fiveg_spark.plans.registry import cnt, dbl, distinct_cnt, epoch, json_int, pct
 from fiveg_spark.sources.tables import load_table
 
 EPS = 1e-6
@@ -49,27 +49,9 @@ SMALL_PKT = 50.0
 LARGE_PKT = 150.0
 
 
-def json_k_expr(dialect: str) -> str:
-    """The one JSON field used by the packet mapping — extracted ONCE in
-    a pre-projection layer (JSON parsing is the most expensive scalar in
-    the scan; doing it once instead of 4× saves ~½ the map time)."""
-    if dialect == "spark":
-        return "CAST(get_json_object(props, '$.k') AS INT)"
-    if dialect == "duckdb":
-        return "CAST(json_extract_string(props, '$.k') AS INT)"
-    raise ValueError(dialect)  # pragma: no cover
-
-
 def packet_projection(dialect: str) -> list[str]:
     """Shared events→packet-event projection over a layer that already
     extracted ``k``; only the epoch snippet differs between dialects."""
-    if dialect == "spark":
-        ts_sec = "(CAST(unix_micros(ts) AS DOUBLE) / 1000000.0)"
-    elif dialect == "duckdb":
-        # same integer micros, same division → bit-identical double
-        ts_sec = "(CAST(epoch_us(ts) AS DOUBLE) / 1000000.0)"
-    else:  # pragma: no cover
-        raise ValueError(dialect)
     return [
         "event_id",
         "ts",
@@ -78,7 +60,7 @@ def packet_projection(dialect: str) -> list[str]:
             "WHEN 1 THEN 'URLLC' ELSE 'mMTC' END AS slice"
         ),
         "user_id AS flow_id",
-        f"{ts_sec} AS ts_sec",
+        f"{epoch('ts', dialect)} AS ts_sec",
         "value AS pkt_len",
         (
             "CASE WHEN event_type IN ('click', 'purchase') THEN 'TCP' "
@@ -224,7 +206,10 @@ def kpi_aggregates(
 def packet_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet → canonical packet-event view (map-only, codegen'd)."""
     events = load_table(spark, "events", sf_dir)
-    with_k = events.selectExpr("*", f"{json_k_expr('spark')} AS k")
+    # the one JSON field the packet mapping reads, extracted ONCE in a
+    # pre-projection layer (JSON parsing is the most expensive scalar in
+    # the scan; doing it once instead of 4× saves ~½ the map time)
+    with_k = events.selectExpr("*", f"{json_int('props', 'k', 'spark')} AS k")
     return with_k.selectExpr(*packet_projection("spark"))
 
 
@@ -263,7 +248,7 @@ def flows_cte(dialect: str) -> str:
     dialects."""
     proj = ",\n      ".join(packet_projection(dialect))
     return f"""WITH events_k AS (
-      SELECT *, {json_k_expr(dialect)} AS k FROM events
+      SELECT *, {json_int("props", "k", dialect)} AS k FROM events
     ), packets AS (
       SELECT
       {proj}

@@ -34,19 +34,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fiveg_spark.plans.plan_ledger import note_precollect
 from fiveg_spark.plans.registry import Query
 
 # ---- deterministic constructions -----------------------------------------
 
-
-
-def _noted(df):
-    """Chain-preserving ledger hook (plans/plan_ledger.note_precollect):
-    no-op outside a ledger capture pass."""
-    from fiveg_spark.plans.plan_ledger import note_precollect
-
-    note_precollect(df)
-    return df
 
 def _p5_image() -> tuple[bytes, np.ndarray]:
     w, h = 8, 5
@@ -484,7 +476,7 @@ def _quarantine_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("jsonl", read_jsonl(spark, jdir, schema)),
             ("csv", read_csv(spark, cdir, schema)),
         ):
-            agg = _noted(clean.agg(
+            agg = note_precollect(clean.agg(
                 F.count("*").alias("n"),
                 F.sum("id").alias("sum_id"),
                 F.sum("v").alias("sum_v"),

@@ -12,7 +12,15 @@ analytics shapes.  All shared-text SQL, oracle-checked.
 
 from __future__ import annotations
 
-from fiveg_spark.plans.registry import cnt, dbl, epoch, materialized_backed, pct, sql_backed
+from fiveg_spark.plans.registry import (
+    cnt,
+    dbl,
+    epoch,
+    json_int,
+    materialized_backed,
+    pct,
+    sql_backed,
+)
 
 
 def _dq_checks_sql(d: str) -> str:
@@ -411,12 +419,10 @@ def _dq_trend_sql(d: str) -> str:
     # failure is the one that emits nothing).  Checks: NULL values,
     # non-positive values, duplicate event_ids (count − distinct),
     # hour-of-day coverage, and props-JSON parse success (the A4
-    # extraction, kpi.json_k_expr — THE shared parser).
+    # extraction, registry.json_int — THE shared parser).
     #
     # Scale: one events scan → per-day hash-agg (count-distincts key on
     # (day, id)/(day, hour) — bounded per day); spine join is |days|.
-    from fiveg_spark.operators.kpi import json_k_expr
-
     day = f"CAST(floor({epoch('ts', d)} / 86400.0) AS BIGINT)"
     if d == "spark":
         spine = "SELECT explode(sequence(d0, d1)) AS day_idx FROM bounds"
@@ -432,7 +438,7 @@ def _dq_trend_sql(d: str) -> str:
         count(*) - count(DISTINCT event_id) AS n_dup_event_ids,
         count(DISTINCT CAST(floor({epoch('ts', d)} / 3600.0) AS BIGINT))
           AS hours_covered,
-        sum(CASE WHEN {json_k_expr(d)} IS NULL THEN 1 ELSE 0 END)
+        sum(CASE WHEN {json_int("props", "k", d)} IS NULL THEN 1 ELSE 0 END)
           AS n_props_parse_fail
       FROM events
       GROUP BY {day}

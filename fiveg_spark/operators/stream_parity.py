@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fiveg_spark.operators.sketches import BLOOM_K, BLOOM_M, bloom_bucket_expr
+from fiveg_spark.plans.plan_ledger import collected
 from fiveg_spark.plans.registry import Query, ensure_views
 
 WEEK_S = 604800  # epoch weeks: 86400 * 7, so a day never spans batches
@@ -77,16 +78,6 @@ def _week_batches(
         (i, ev.filter(F.col("wk") == w).drop("wk"))
         for i, w in enumerate(weeks)
     ]
-
-
-def _collected(spark: SparkSession, df: DataFrame, schema: str) -> DataFrame:
-    """Materialize a bounded result frame so the scratch store can be
-    deleted before returning (the ml/certify tiny-frame doctrine)."""
-    from fiveg_spark.plans.plan_ledger import note_precollect
-
-    note_precollect(df)  # ledger capture of the distributed pre-collect plan
-    rows = [tuple(r) for r in df.collect()]
-    return spark.createDataFrame(rows, schema)
 
 
 def _store_or_empty(
@@ -164,7 +155,7 @@ def _bloom_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, n_bits_set LONG, n_absent_fp LONG,"
@@ -279,7 +270,7 @@ def _dedup_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("wave")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "wave LONG, n_wave_docs LONG, n_accepted LONG, n_hashes LONG",
@@ -352,7 +343,7 @@ def _heavy_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_total",
             F.round(F.col("est_share") + 1e-9, 4).alias("est_share"),
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, rnk LONG, user_id LONG, est_count LONG,"
@@ -482,7 +473,7 @@ def _lateness_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("frontier_es") + 1e-9, 4).alias("frontier_es"),
             F.col("high_water_batch").cast("long"),
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "watermark_s LONG, pooled_late_share DOUBLE, n_rows LONG,"
@@ -610,7 +601,7 @@ def _cusum_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("batch_id", "event_type")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "batch_id LONG, event_type STRING, n_rows LONG, z DOUBLE,"
@@ -717,7 +708,7 @@ def _psi_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_rows").cast("long"),
             "drifted",
         ).orderBy("batch_id", "event_type")
-        return _collected(
+        return collected(
             spark,
             out,
             "batch_id LONG, event_type STRING, psi DOUBLE, n_rows LONG,"
@@ -878,7 +869,7 @@ def _upsert_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_users").cast("long"),
             F.round(F.col("sum_value") + 1e-9, 4).alias("sum_value"),
         ).orderBy("event_type", "wk")
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, wk LONG, n_events LONG, n_users LONG,"
@@ -971,7 +962,7 @@ def _tdigest_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("est_p99") >= F.col("p90"))
              & (F.col("est_p99") <= F.col("vmax"))).alias("p99_in_band"),
         ).orderBy("event_type", "day")
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, day LONG, n_events LONG,"
@@ -1052,7 +1043,7 @@ def _hll_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= 0.15 * F.col("n_exact_users")
             ).alias("est_within_15pct"),
         ).orderBy("event_type", "day")
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, day LONG, n_events LONG,"
@@ -1140,7 +1131,7 @@ def _reservoir_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type")
         )
-        return _collected(
+        return collected(
             spark,
             out,
             "event_type STRING, expected_k LONG, n_sample LONG,"
@@ -1337,7 +1328,7 @@ def _stream_kpi36_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             + [f"{k.name} {'LONG' if k.kind == COUNT else 'DOUBLE'}" for k in exact_kpis]
             + [f"{b} BOOLEAN" for b in _ENVELOPES]
         )
-        return _collected(spark, result, schema)
+        return collected(spark, result, schema)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -1483,7 +1474,7 @@ def _stream_attribution_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("slice")
         )
-        return _collected(
+        return collected(
             spark, rollup,
             "slice STRING, n_pairs LONG, n_views_matched LONG,"
             " n_clicks_matched LONG, mean_delay_s DOUBLE",
@@ -1587,12 +1578,13 @@ def _kafka_wire_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kafka_wire_oracle() -> str:
-    from fiveg_spark.operators.kpi import json_k_expr, packet_projection
+    from fiveg_spark.operators.kpi import packet_projection
+    from fiveg_spark.plans.registry import json_int
 
     proj = ",\n      ".join(packet_projection("duckdb"))
     return f"""
     WITH events_k AS (
-      SELECT *, {json_k_expr("duckdb")} AS k FROM events
+      SELECT *, {json_int("props", "k", "duckdb")} AS k FROM events
     ), packets AS (
       SELECT
       {proj}
@@ -1682,7 +1674,7 @@ def _index_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " + 0.0 AS DOUBLE)"
             ).alias("imbalance_ratio"),
         ).orderBy("list_id")
-        return _collected(
+        return collected(
             spark, health,
             "list_id LONG, n_vectors LONG, mean_cos DOUBLE,"
             " imbalance_ratio DOUBLE",
@@ -1835,7 +1827,7 @@ def _ewma_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("zscore"),
             "is_anomaly",
         )
-        return _collected(
+        return collected(
             spark, scored,
             "slice STRING, ts_sec DOUBLE, value DOUBLE, zscore DOUBLE,"
             " is_anomaly BOOLEAN",

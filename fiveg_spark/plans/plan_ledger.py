@@ -39,7 +39,7 @@ import re
 import uuid
 from hashlib import md5
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from fiveg_spark.plans.explain import simple_plan
 
@@ -127,7 +127,7 @@ PLAN_BUILD_EXECUTES = frozenset({
 # LocalTableScan that canonicalizes to one constant line, so a
 # fingerprint would be false security.  Since r13 the default ledger
 # pass EXECUTES them once and fingerprints the distributed frames they
-# collect (note_precollect hooks at every _collected/_noted site);
+# collect (a note_precollect hook, or ``collected``, at every site);
 # anything still reported "skipped: ... no note_precollect hook" does
 # genuinely no distributed pre-collect work — e.g. table_health_audit,
 # whose audit reads parquet FOOTER METADATA driver-side by design.
@@ -316,21 +316,30 @@ def plan_fingerprint(df: DataFrame) -> dict:
 # Parity/cert queries return COLLECTED local frames (LocalTableScan —
 # fingerprinting that is false security), but the frame they collect
 # HAS a real distributed plan.  Operators call note_precollect(df)
-# right before .collect() (the shared _collected helpers do it for
-# whole families); a ledger pass with capture enabled executes those
-# builds once and fingerprints every captured pre-collect plan.
+# right before .collect() (``collected`` does it for whole families);
+# a ledger pass with capture enabled executes those builds once and
+# fingerprints every captured pre-collect plan.
 _CAPTURE: list[dict] | None = None
 
 
-def note_precollect(df: DataFrame) -> None:
+def note_precollect(df: DataFrame) -> DataFrame:
     """Record the distributed plan about to be collected — no-op unless
-    a ledger capture pass is active, so certification runs pay nothing."""
+    a ledger capture pass is active, so certification runs pay nothing.
+    Returns ``df``, so it chains as ``df.transform(note_precollect)``."""
     global _CAPTURE
     if _CAPTURE is not None:
         try:
             _CAPTURE.append(plan_fingerprint(df))
         except Exception:  # noqa: BLE001 — capture must never fail a run
             pass
+    return df
+
+
+def collected(spark: SparkSession, df: DataFrame, schema: str) -> DataFrame:
+    """Note, collect and re-create a bounded result frame, so a query
+    can delete its scratch store before returning."""
+    rows = [tuple(r) for r in note_precollect(df).collect()]
+    return spark.createDataFrame(rows, schema)
 
 
 def _merge_captured(caps: list[dict]) -> dict:

@@ -102,7 +102,3 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
             ),
         )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in TABLES}

@@ -83,6 +83,9 @@ def foreach_batch_cusum(
             return
         spark = batch_df.sparkSession
         state: dict[str, tuple[float, float]] = {}
+        # not store_guard.is_replay: the replay check reads the batch_id
+        # high-water mark from the same aggregate that loads the state,
+        # so the state store is read once per batch
         if _has_parquet(state_dir):
             latest = (
                 spark.read.parquet(state_dir)

@@ -44,7 +44,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fiveg_spark.streaming.store_guard import has_parquet as _has_parquet
+from fiveg_spark.streaming.store_guard import is_replay
 from pyspark.sql.window import Window
 
 HH_M = 16  # per-batch candidates kept per event_type
@@ -64,14 +64,8 @@ def foreach_batch_heavy(path: str, m: int = HH_M) -> Callable[[DataFrame, int], 
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if _has_parquet(path):
-            top = (
-                spark.read.parquet(path)
-                .agg(F.max("batch_id").alias("mx"))
-                .head()["mx"]
-            )
-            if top is not None and batch_id <= top:
-                return  # replayed batch: already appended
+        if is_replay(spark, path, batch_id):
+            return  # replayed batch: already appended
         counts = batch_df.groupBy("event_type", "user_id").agg(
             F.count("*").alias("cnt")
         )

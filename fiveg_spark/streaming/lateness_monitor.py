@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fiveg_spark.operators.lateness import WATERMARK_LADDER
+from fiveg_spark.streaming.store_guard import has_parquet
 
 LATE_TARGET = 0.01  # recommended_watermark: pooled late share <= this
 
@@ -69,14 +70,7 @@ def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
     fresh, re-score replayed batches, and record forced-0.0 first-batch
     shares), corrupting the pooled statistics.  Failing the batch lets
     the stream retry once the store is readable again."""
-    if not os.path.isdir(path):
-        return None
-    has_parquet = any(
-        f.endswith(".parquet")
-        for _r, _d, fs in os.walk(path)
-        for f in fs
-    )
-    if not has_parquet:
+    if not has_parquet(path):
         return None
     return spark.read.schema(_store_schema()).parquet(path)
 

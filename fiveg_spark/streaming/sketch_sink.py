@@ -34,7 +34,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fiveg_spark.streaming.store_guard import has_parquet as _has_parquet
+from fiveg_spark.streaming.store_guard import is_replay
 
 
 
@@ -46,14 +46,8 @@ def foreach_batch_sketch(path: str) -> Callable[[DataFrame, int], None]:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if _has_parquet(path):
-            top = (
-                spark.read.parquet(path)
-                .agg(F.max("batch_id").alias("m"))
-                .head()["m"]
-            )
-            if top is not None and batch_id <= top:
-                return  # replayed batch: already appended
+        if is_replay(spark, path, batch_id):
+            return  # replayed batch: already appended
         partial = (
             batch_df.groupBy(
                 "event_type", F.date_trunc("day", "ts").alias("day")

@@ -120,7 +120,7 @@ def test_ridge_cert_invariants_and_augmented_lstsq_parity(spark):
     one = design.filter(F.col("slice") == sorted(gram)[0])
     X = np.array([r["x"] for r in one.select("x").collect()], dtype=float)
     Y = np.array([r["y"] for r in one.select("y").collect()], dtype=float)
-    xtx, xty = gram[sorted(gram)[0]]
+    xtx, xty, _yty = gram[sorted(gram)[0]]
     lam = RIDGE_LAMBDAS[1]
     b_gram = np.linalg.solve(xtx + lam * np.eye(xtx.shape[0]), xty)
     Xa = np.vstack([X, np.sqrt(lam) * np.eye(X.shape[1])])

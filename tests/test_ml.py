@@ -11,7 +11,12 @@ from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale, with_
 from fiveg_spark.ml.hybrid import hybrid_eval
 from fiveg_spark.ml.model import forward, init_weights, predict_residuals
 from fiveg_spark.ml.sequences import sliding_sequences
-from fiveg_spark.ml.var import lag_design, normal_equations, solve_coefficients
+from fiveg_spark.ml.var import (
+    collect_gram,
+    lag_design,
+    normal_equations,
+    solve_coefficients,
+)
 from fiveg_spark.operators.kpi import kpi36
 from tests.conftest import SF_DIR
 
@@ -49,6 +54,21 @@ def test_var_normal_equations_match_numpy_lstsq(scaled):
         B_spark = coeffs[slice_name]
         assert B_spark.shape == B_np.shape
         np.testing.assert_allclose(B_spark, B_np, rtol=1e-4, atol=1e-6)
+
+
+def test_gram_carries_the_target_moments(scaled):
+    """n, Σy and YᵀY per slice come off the one collected Gram of
+    [X | Y]: the intercept cell, the intercept row of XᵀY and the
+    target block."""
+    design = lag_design(scaled, p=3).filter(F.col("split") == "train")
+    gram = collect_gram(normal_equations(design))
+    rows = design.select("slice", "y").collect()
+    assert set(gram) == {r["slice"] for r in rows}
+    for slice_name, (xtx, xty, yty) in gram.items():
+        Y = np.array([r["y"] for r in rows if r["slice"] == slice_name])
+        assert xtx[0, 0] == len(Y)
+        assert np.allclose(xty[0], Y.sum(axis=0))
+        assert np.allclose(yty, Y.T @ Y)
 
 
 def test_sliding_sequences_are_the_preceding_rows(spark, scaled):

@@ -27,9 +27,10 @@ def packet_stream(spark, tmp_path_factory):
         .parquet(str(src_dir))
         .transform(normalize_event_ts)
     )
-    from fiveg_spark.operators.kpi import json_k_expr, packet_projection
+    from fiveg_spark.operators.kpi import packet_projection
+    from fiveg_spark.plans.registry import json_int
 
-    stream = stream.selectExpr("*", f"{json_k_expr('spark')} AS k")
+    stream = stream.selectExpr("*", f"{json_int('props', 'k', 'spark')} AS k")
     return stream.selectExpr(*packet_projection("spark")), batch
 
 
