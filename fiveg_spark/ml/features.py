@@ -12,7 +12,7 @@ downstream operate on a reduced DataFrame.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # feature ← KPI column (train.py FEATURE_MAP); None: a source missing
@@ -54,27 +54,68 @@ def with_split(df: DataFrame) -> DataFrame:
     )
 
 
-def robust_scale(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Fit median/IQR on the train split, transform ALL rows.
+_SPLIT_KEYS = ("slice", "window_start", "rn", "n", "split")
 
-    Returns (scaled_frame, params).  sklearn semantics: zero-IQR features
-    (the constant 0.0 fillers) divide by 1.0, not 0.
-    """
-    split_df = with_split(df)
+
+def scaler_params(split_df: DataFrame) -> DataFrame:
+    """Per-slice median/IQR of every feature over the train split of a
+    ``with_split`` frame: (slice, {f}_center, {f}_iqr)."""
     aggs = []
     for f in FEATURES:
         aggs.append(F.expr(f"percentile({f}, 0.5)").alias(f"{f}_center"))
         aggs.append(
             F.expr(f"percentile({f}, 0.75) - percentile({f}, 0.25)").alias(f"{f}_iqr")
         )
-    params = split_df.filter(F.col("split") == "train").groupBy("slice").agg(*aggs)
+    return split_df.filter(F.col("split") == "train").groupBy("slice").agg(*aggs)
 
+
+def _iqr_scale(iqr):
+    # sklearn semantics: a zero-IQR feature (the constant 0.0 fillers)
+    # divides by 1.0, not 0
+    return F.when(iqr > 0, iqr).otherwise(F.lit(1.0))
+
+
+def robust_scale(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Fit median/IQR on the train split, transform ALL rows.
+
+    Returns (scaled_frame, params)."""
+    split_df = with_split(df)
+    params = scaler_params(split_df)
     scaled = split_df.join(F.broadcast(params), "slice")
     for f in FEATURES:
-        scale = F.when(F.col(f"{f}_iqr") > 0, F.col(f"{f}_iqr")).otherwise(F.lit(1.0))
+        scale = _iqr_scale(F.col(f"{f}_iqr"))
         scaled = scaled.withColumn(f, (F.col(f) - F.col(f"{f}_center")) / scale)
-    keep = ["slice", "window_start", "rn", "n", "split", *FEATURES]
-    return scaled.select(*keep), params
+    return scaled.select(*_SPLIT_KEYS, *FEATURES), params
+
+
+def scaler_columns(rows) -> tuple[Column, Column]:
+    """Collected ``scaler_params`` rows → (centers, scales): two
+    array<double> columns of literals, read at each row's slice, that
+    apply the same doubles ``robust_scale`` reads off its params join."""
+
+    def per_slice(values) -> Column:
+        pairs = [
+            c
+            for r in sorted(rows, key=lambda r: r["slice"])
+            for c in (F.lit(r["slice"]), F.array(*[values(r, f) for f in FEATURES]))
+        ]
+        return F.create_map(*pairs)[F.col("slice")]
+
+    centers = per_slice(lambda r, f: F.lit(r[f"{f}_center"]).cast("double"))
+    scales = per_slice(lambda r, f: _iqr_scale(F.lit(r[f"{f}_iqr"]).cast("double")))
+    return centers, scales
+
+
+def scale_by(split_df: DataFrame, centers: Column, scales: Column) -> DataFrame:
+    """``robust_scale``'s transform with ``scaler_columns`` literals in
+    place of the params join: the same arithmetic, no second aggregate."""
+    return split_df.select(
+        *_SPLIT_KEYS,
+        *[
+            ((F.col(f) - F.element_at(centers, i + 1)) / F.element_at(scales, i + 1)).alias(f)
+            for i, f in enumerate(FEATURES)
+        ],
+    )
 
 
 def as_vector(df: DataFrame, out: str = "x") -> DataFrame:

@@ -5,18 +5,26 @@ split, take its one-step forecast, model the residuals with the
 network, final_pred = var_pred + resid_pred, inverse RobustScaler,
 clip at 0.
 
-Distributed layout:
-  kpi36 → 7 features → scaled frame (hourly, tiny)  [1 shuffle: KPI agg,
-                                                     pruned to 5 KPIs]
-    → lag design via window functions               [reuses series order]
-    → VAR fit: partial Gram mapInPandas + solve     [tiny shuffle, D6]
-    → per-row VAR forecast + residuals (numpy dot,
-      B broadcast, Arrow batches)
-    → sliding sequences over residuals              [window collect_list]
-    → network forward (mapInPandas, weights bcast)  [D8]
-    → compose + inverse-scale + clip, long form     [broadcast params join]
+Distributed layout of one forecast pass:
+  kpi36 → 7 features, checkpointed           [1 shuffle: KPI agg, pruned
+                                              to 5 KPIs, run once]
+    → RobustScaler params (one row per slice), collected and applied
+      as literals
+    → scaled lag design, checkpointed        [window functions on the
+                                              series key]
+    → VAR fit: partial Gram mapInPandas + solve   [tiny shuffle, D6]
+    → per-row VAR forecast + residuals (numpy dot, B broadcast) →
+      one applyInPandas per slice: residual windows as strided views,
+      network forward on the requested splits only  [1 shuffle, D8]
+    → compose + inverse-scale (the same literals) + clip, long form
 
-Nothing ever collects to the driver except the m×m Gram cells.
+The driver collects only the m×m Gram cells and the scaler params.
+The trade: the forward's parallelism is the number of series (one task
+per slice).  A series is ~720 hourly rows at any sf, and per-series
+chunks make each row's float32 output independent of the partitioning.
+
+``residual_pipeline`` is the stepwise form that training reads: the
+residual frame checkpointed, and the sequences as a collect_list window.
 """
 
 from __future__ import annotations
@@ -27,7 +35,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
+from fiveg_spark.ml.features import (
+    FEATURES,
+    feature_frame,
+    scale_by,
+    scaler_columns,
+    scaler_params,
+    with_split,
+)
 from fiveg_spark.ml.model import init_weights, predict_residuals
 from fiveg_spark.ml.sequences import preceding_windows
 from fiveg_spark.ml.var import lag_design, normal_equations, solve_coefficients
@@ -76,23 +91,37 @@ def residual_frame(design: DataFrame, coeffs_bc) -> DataFrame:
     return design.mapInPandas(score, schema=_RESID_SCHEMA)
 
 
+def _scaled_design(spark: SparkSession, sf_dir: str, p: int):
+    """kpi36 → 7 hourly features with their split → RobustScaler → lag
+    design.  Returns (design, scaler_params, (centers, scales)).
+
+    The features are aggregated once and checkpointed: they feed the
+    params AND the design.  The params are collected (one row per
+    slice) and applied as literals (``scaler_columns``), so neither the
+    design nor the caller's plan re-runs their aggregate.  The design
+    is checkpointed too: it feeds the Gram solve AND the residual
+    scorer.  Both frames are hourly and tiny (~720 rows/slice)."""
+    features = with_split(feature_frame(kpi36(spark, sf_dir))).localCheckpoint()
+    params = scaler_params(features)
+    centers, scales = scaler_columns(params.collect())
+    design = lag_design(scale_by(features, centers, scales), p=p).localCheckpoint()
+    return design, params, (centers, scales)
+
+
+def _var_fit(design: DataFrame) -> dict[str, np.ndarray]:
+    """VAR OLS on the train split: {slice: B (m × k)}."""
+    return solve_coefficients(normal_equations(design.filter(F.col("split") == "train")))
+
+
 def residual_pipeline(
     spark: SparkSession, sf_dir: str, p: int = 3, window: int = 60
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared front half of the hybrid: kpi36 → scaled hourly features →
-    VAR fit on the train split → per-row residuals → sliding residual
-    sequences.  Returns (resid, sequences, scaler_params)."""
-    scaled, params = robust_scale(feature_frame(kpi36(spark, sf_dir)))
-    # localCheckpoint both shared frames: design feeds the Gram solve
-    # AND the residual scorer, resid feeds the sequence window AND the
-    # var_pred join downstream — without materialization each reference
-    # re-runs the kpi36 aggregation + scaling pipeline (advisor
-    # repeated-scan). The hourly frame is tiny (~2k rows/slice), so the
-    # checkpoint is effectively free.
-    design = lag_design(scaled, p=p).localCheckpoint()
-    coeffs = solve_coefficients(
-        normal_equations(design.filter(F.col("split") == "train"))
-    )
+    """Stepwise front half of the hybrid, for training: scaled design →
+    VAR fit on the train split → per-row residuals (checkpointed: they
+    feed the sequences and the caller) → sliding residual sequences.
+    Returns (resid, sequences, scaler_params)."""
+    design, params, _ = _scaled_design(spark, sf_dir, p)
+    coeffs = _var_fit(design)
     resid = residual_frame(design, spark.sparkContext.broadcast(coeffs)).localCheckpoint()
 
     # target before seq: the column order the plan ledger fingerprints
@@ -111,41 +140,27 @@ def hybrid_forecast(
 ) -> DataFrame:
     """Long-form forecast: (slice, window_start, split, feature, yhat, y).
 
-    ``splits`` picks which eras survive — ("test",) is the eval default;
-    the conformal calibrator takes ("val", "test") so the radius fits on
-    val and coverage measures on test."""
-    resid, sequences, params = residual_pipeline(spark, sf_dir, p=p, window=window)
-    preds = predict_residuals(sequences, spark.sparkContext.broadcast(init_weights()))
+    ``splits`` picks which eras are scored — ("test",) is the eval
+    default; the conformal calibrator takes ("val", "test") so the
+    radius fits on val and coverage measures on test.  The windows
+    still reach back into the earlier eras."""
+    sc = spark.sparkContext
+    design, _, (centers, scales) = _scaled_design(spark, sf_dir, p)
+    coeffs = _var_fit(design)
+    resid = residual_frame(design, sc.broadcast(coeffs)).select(
+        "slice", "window_start", "split", "var_pred", "resid"
+    )
+    preds = predict_residuals(
+        resid, sc.broadcast(init_weights()), window=window, splits=splits
+    )
 
     # final = var_pred + resid_pred, then inverse-scale + clip (train.py:256-261)
-    composed = (
-        preds.join(
-            resid.select("slice", "window_start", "var_pred"),
-            ["slice", "window_start"],
-        )
-        .filter(F.col("split").isin(*splits))
-        .select(
-            "slice",
-            "window_start",
-            "split",
-            F.expr("zip_with(var_pred, resid_pred, (a, b) -> a + b)").alias("yhat_scaled"),
-            F.expr("zip_with(var_pred, target, (a, b) -> a + b)").alias("y_scaled"),
-        )
-    )
-
-    centers = F.array(*[F.col(f"{f}_center") for f in FEATURES])
-    scales = F.array(
-        *[
-            F.when(F.col(f"{f}_iqr") > 0, F.col(f"{f}_iqr")).otherwise(F.lit(1.0))
-            for f in FEATURES
-        ]
-    )
-    inv = composed.join(F.broadcast(params), "slice").select(
+    inv = preds.select(
         "slice",
         "window_start",
         "split",
-        "yhat_scaled",
-        "y_scaled",
+        F.expr("zip_with(var_pred, resid_pred, (a, b) -> a + b)").alias("yhat_scaled"),
+        F.expr("zip_with(var_pred, resid, (a, b) -> a + b)").alias("y_scaled"),
         centers.alias("centers"),
         scales.alias("scales"),
     )

@@ -15,10 +15,11 @@ anyway, no per-step copies — and records nothing otherwise, so
 inference and training run the same arithmetic.
 
 Execution model: weights are a small pytree of numpy arrays, broadcast
-once; scoring runs inside ``mapInPandas`` so each Arrow batch of
-(window × k) sequences does chunked vectorized forward passes per
-executor — the Spark-idiomatic shape for model scoring (no driver
-tensor, no per-row Python).
+once; ``predict_residuals`` runs chunked vectorized forward passes on
+the executors — per Arrow batch of precomputed (window × k) sequences
+(``mapInPandas``), or per series straight off a residual series, whose
+windows are strided views (``applyInPandas``).  No driver tensor, no
+per-row Python.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -238,31 +240,83 @@ PRED_SCHEMA = T.StructType(
 CHUNK = 128  # sequences per forward pass: bounds peak working memory
 # (MHA scores dominate: CHUNK·4·60·60 f32 ≈ 7 MB) so executor memory
 # stays flat regardless of Arrow batch size, and freshly-faulted pages
-# get reused by every subsequent chunk.
+# get reused by every subsequent chunk.  Which rows share a chunk moves
+# a row's float32 output by up to ~1e-6, so chunks follow each series,
+# never a partition's hash mix of series.
 
 
-def score_chunks(pdf: pd.DataFrame, predict):
-    """Yield PRED_SCHEMA frames for ``pdf``, one ``predict(X)`` per CHUNK rows."""
-    for lo in range(0, len(pdf), CHUNK):
-        part = pdf.iloc[lo : lo + CHUNK]
-        preds = predict(stack_seqs(part["seq"]))
-        yield pd.DataFrame(
-            {
-                "slice": part["slice"].values,
-                "window_start": part["window_start"].values,
-                "split": part["split"].values,
-                "target": [list(map(float, t)) for t in part["target"]],
-                "resid_pred": [p.astype(np.float64).tolist() for p in preds],
-            }
-        )
+def score_chunks(seqs: np.ndarray, predict) -> np.ndarray:
+    """float64 (B, k) predictions for B sequences, one ``predict(X)`` per
+    CHUNK of them.  ``seqs`` is a (B, window, k) array, or an object
+    array of ``seq`` cells that is stacked one chunk at a time."""
+    parts = []
+    for lo in range(0, len(seqs), CHUNK):
+        part = seqs[lo : lo + CHUNK]
+        parts.append(predict(stack_seqs(part) if part.dtype == object else part))
+    return np.concatenate(parts).astype(np.float64) if parts else np.empty((0, 0))
 
 
-def predict_residuals(sequences: DataFrame, weights_bc) -> DataFrame:
-    """mapInPandas scoring of one broadcast weight pytree."""
+def pred_frame(pdf: pd.DataFrame, preds: np.ndarray) -> pd.DataFrame:
+    """PRED_SCHEMA rows: ``pdf``'s keys and targets beside ``preds``."""
+    return pd.DataFrame(
+        {
+            "slice": pdf["slice"].values,
+            "window_start": pdf["window_start"].values,
+            "split": pdf["split"].values,
+            "target": [list(map(float, t)) for t in pdf["target"]],
+            "resid_pred": [p.tolist() for p in preds],
+        }
+    )
 
-    def score(batches):
+
+def predict_residuals(
+    frame: DataFrame,
+    weights_bc,
+    window: int | None = None,
+    splits: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """Score one broadcast weight pytree.
+
+    Without ``window``, ``frame`` holds one ``seq`` cell per row; each
+    Arrow batch is scored as it streams (mapInPandas) into PRED_SCHEMA.
+
+    With ``window``, ``frame`` is a residual series: one ``resid`` vector
+    per (slice, window_start).  One applyInPandas per slice reads the
+    series once, takes every row's preceding ``window`` residuals as a
+    strided view (``sliding_window_view``: no per-row lists, no
+    collect_list window) and runs the forward only on rows with a full
+    window whose ``split`` is in ``splits`` (all rows if None).  Those
+    rows come back with all of ``frame``'s columns plus ``resid_pred``."""
+    if window is None:
+
+        def score(batches):
+            w = weights_bc.value
+            for pdf in batches:
+                if len(pdf):
+                    preds = score_chunks(pdf["seq"].values, lambda X: forward(X, w))
+                    yield pred_frame(pdf, preds)
+
+        return frame.mapInPandas(score, schema=PRED_SCHEMA)
+
+    keep = None if splits is None else list(splits)
+
+    def score_series(pdf: pd.DataFrame) -> pd.DataFrame:
         w = weights_bc.value
-        for pdf in batches:
-            yield from score_chunks(pdf, lambda X: forward(X, w))
+        pdf = pdf.sort_values("window_start", ignore_index=True)
+        rows = np.arange(window, len(pdf))
+        if keep is not None:
+            rows = rows[pdf["split"].iloc[window:].isin(keep).values]
+        out = pdf.iloc[rows]
+        if len(rows) == 0:
+            return out.assign(resid_pred=pd.Series(dtype=object))
+        R = np.asarray(list(pdf["resid"]), dtype=DTYPE)
+        # windows[i] = rows i .. i+window-1, the history of row i+window;
+        # fancy indexing gathers only the scored windows
+        windows = sliding_window_view(R, window, axis=0).transpose(0, 2, 1)
+        preds = score_chunks(windows[rows - window], lambda X: forward(X, w))
+        return out.assign(resid_pred=[p.tolist() for p in preds])
 
-    return sequences.mapInPandas(score, schema=PRED_SCHEMA)
+    schema = T.StructType(
+        frame.schema.fields + [T.StructField("resid_pred", T.ArrayType(T.DoubleType()))]
+    )
+    return frame.groupBy("slice").applyInPandas(score_series, schema=schema)

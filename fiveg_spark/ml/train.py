@@ -41,6 +41,7 @@ from fiveg_spark.ml.model import (
     Dims,
     forward,
     init_weights,
+    pred_frame,
     score_chunks,
     stack_seqs,
 )
@@ -474,7 +475,8 @@ def predict_trained(sequences: DataFrame, weights_bc, dims: Dims) -> DataFrame:
         for pdf in batches:
             for slice_name, g in pdf.groupby("slice"):
                 if slice_name in by_slice:
-                    yield from score_chunks(g, _slice_predictor(by_slice[slice_name], dims))
+                    predict = _slice_predictor(by_slice[slice_name], dims)
+                    yield pred_frame(g, score_chunks(g["seq"].values, predict))
 
     return sequences.mapInPandas(score, schema=PRED_SCHEMA)
 
@@ -489,12 +491,13 @@ def hybrid_train_eval(
 ) -> DataFrame:
     """Trained-hybrid vs VAR-only evaluation (the D17 training story).
 
-    Pipeline: residual sequences (shared with hybrid_forecast) → per-slice
-    applyInPandas Adam fit on the TRAIN split → broadcast weights →
-    score ALL rows → per-slice TEST-split RMSE of (VAR + trained resid)
-    vs VAR alone, plus first/last training loss.  Rows-only in the
-    contract (iterative optimization is not SQL); the pytest gate asserts
-    loss decreases and the trained hybrid beats VAR-only.
+    Pipeline: residual sequences (``hybrid.residual_pipeline``) →
+    per-slice applyInPandas Adam fit on the TRAIN split → broadcast
+    weights → score the TEST rows only → per-slice TEST-split RMSE of
+    (VAR + trained resid) vs VAR alone, plus first/last training loss.
+    Rows-only in the contract (iterative optimization is not SQL); the
+    pytest gate asserts loss decreases and the trained hybrid beats
+    VAR-only.
     """
     from fiveg_spark.ml.hybrid import residual_pipeline
 
@@ -520,7 +523,7 @@ def hybrid_train_eval(
 
     # scaled-space errors: VAR-only error IS the residual target;
     # hybrid error = target - resid_pred
-    errs = preds.filter(F.col("split") == "test").select(
+    errs = preds.select(
         "slice",
         F.expr(
             "aggregate(zip_with(target, resid_pred, (t, p) -> (t - p) * (t - p)),"

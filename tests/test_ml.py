@@ -122,6 +122,93 @@ def test_hybrid_eval_surface(spark):
     assert all(r["n"] > 0 for r in rows)
 
 
+def test_hybrid_eval_does_not_depend_on_the_physical_plan(spark):
+    """The float32 forward's output for a row moves with the rows that
+    share its chunk, so chunks follow each series: the metrics must not
+    move with the shuffle width or with AQE's partition coalescing."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    seen = {}
+    try:
+        for parts in ("1", "8"):
+            for aqe in ("true", "false"):
+                for k, v in zip(keys, (parts, aqe)):
+                    spark.conf.set(k, v)
+                rows = hybrid_eval(spark, SF_DIR, p=2, window=12).collect()
+                seen[(parts, aqe)] = sorted(tuple(r) for r in rows)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    distinct = {tuple(v) for v in seen.values()}
+    assert len(distinct) == 1, seen
+
+
+def test_fused_forecast_matches_the_stepwise_path(spark):
+    """hybrid_forecast's one per-slice pass against the stepwise frames
+    (residual_pipeline → sequences → predict_residuals → compose): same
+    rows, y bit for bit (y = var_pred + resid, then inverse-scaled), and
+    yhat within the float32 forward's batch drift."""
+    from fiveg_spark.ml.hybrid import hybrid_forecast, residual_pipeline
+
+    p, window, splits = 2, 12, ("train", "val", "test")
+    fused = {
+        (r["slice"], r["window_start"], r["split"], r["feature"]): (r["yhat"], r["y"])
+        for r in hybrid_forecast(spark, SF_DIR, p=p, window=window, splits=splits).collect()
+    }
+
+    resid, sequences, params = residual_pipeline(spark, SF_DIR, p=p, window=window)
+    preds = predict_residuals(sequences, spark.sparkContext.broadcast(init_weights()))
+    var_pred = {
+        (r["slice"], r["window_start"]): r["var_pred"]
+        for r in resid.select("slice", "window_start", "var_pred").collect()
+    }
+    scaler = {r["slice"]: r for r in params.collect()}
+    stepwise = {}
+    for r in preds.collect():
+        s = scaler[r["slice"]]
+        vp = np.array(var_pred[(r["slice"], r["window_start"])])
+        y_scaled = vp + np.array(r["target"])
+        yhat_scaled = vp + np.array(r["resid_pred"])
+        for i, f in enumerate(FEATURES):
+            iqr = s[f"{f}_iqr"]
+            scale, center = (iqr if iqr > 0 else 1.0), s[f"{f}_center"]
+            stepwise[(r["slice"], r["window_start"], r["split"], f)] = (
+                max(yhat_scaled[i] * scale + center, 0.0),
+                y_scaled[i] * scale + center,
+            )
+
+    assert set(fused) == set(stepwise)
+    keys = sorted(stepwise)
+    assert [fused[k][1] for k in keys] == [stepwise[k][1] for k in keys]
+    np.testing.assert_allclose(
+        [fused[k][0] for k in keys], [stepwise[k][0] for k in keys], rtol=1e-4, atol=1e-5
+    )
+
+
+def test_hybrid_eval_plan_reads_no_file_and_runs_one_grouped_pass(spark):
+    """The forecast tail reads the checkpointed design only: no parquet
+    re-scan (the scaler params arrive as literals), no window (the
+    residual windows are built inside the per-slice pass), and exactly
+    one grouped-map Python pass."""
+    df = hybrid_eval(spark, SF_DIR, p=2, window=12)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    final = plan.executedPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+    names = []
+
+    def walk(node):
+        names.append(node.nodeName())
+        if node.nodeName().endswith("QueryStage"):
+            walk(node.plan())
+        for child in _seq(node.children()):
+            walk(child)
+
+    walk(final)
+    assert [n for n in names if n.startswith("Scan")] == ["Scan ExistingRDD"], names
+    assert "Window" not in names, names
+    assert names.count("FlatMapGroupsInPandas") == 1, names
+
+
 def _seq(jseq):
     return [jseq.apply(i) for i in range(jseq.size())]
 
