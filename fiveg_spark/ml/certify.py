@@ -74,7 +74,7 @@ def _train_gram(spark: SparkSession, sf_dir: str) -> dict:
     distributed Gram pass, noted for the plan ledger.  XᵀX[0, 0] is n
     and XᵀY[0] is Σy (the intercept column), so the certs below read
     every target moment they need from it."""
-    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
+    scaled, _, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
     design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train")
     return collect_gram(normal_equations(design).transform(note_precollect))
 
@@ -383,7 +383,7 @@ def gru_forward_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fiveg_spark.ml.model import forward, init_weights, predict_residuals, stack_seqs
     from fiveg_spark.ml.sequences import sliding_sequences
 
-    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
+    scaled, _, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
     seqs = sliding_sequences(scaled).persist()
     preds = None
     try:

@@ -54,68 +54,51 @@ def with_split(df: DataFrame) -> DataFrame:
     )
 
 
-_SPLIT_KEYS = ("slice", "window_start", "rn", "n", "split")
+def robust_scale(df: DataFrame) -> tuple[DataFrame, DataFrame, tuple[Column, Column]]:
+    """Fit median/IQR per slice on the train split, transform ALL rows.
 
-
-def scaler_params(split_df: DataFrame) -> DataFrame:
-    """Per-slice median/IQR of every feature over the train split of a
-    ``with_split`` frame: (slice, {f}_center, {f}_iqr)."""
+    Returns (scaled_frame, params, (centers, scales)).  Eager: the split
+    frame is checkpointed at call time, since it feeds the fit AND the
+    transform, so the KPI aggregate under it runs once.  ``params`` (one row per slice) is
+    collected and applied as literals: ``centers`` and ``scales`` are
+    array<double> columns read at each row's slice, and callers that
+    invert the transform reuse them, so no plan downstream re-runs the
+    aggregate or joins it back.  sklearn semantics: zero-IQR features
+    (the constant 0.0 fillers) divide by 1.0, not 0."""
+    split_df = with_split(df).localCheckpoint()
     aggs = []
     for f in FEATURES:
         aggs.append(F.expr(f"percentile({f}, 0.5)").alias(f"{f}_center"))
         aggs.append(
             F.expr(f"percentile({f}, 0.75) - percentile({f}, 0.25)").alias(f"{f}_iqr")
         )
-    return split_df.filter(F.col("split") == "train").groupBy("slice").agg(*aggs)
+    params = split_df.filter(F.col("split") == "train").groupBy("slice").agg(*aggs)
+    rows = sorted(params.collect(), key=lambda r: r["slice"])
 
-
-def _iqr_scale(iqr):
-    # sklearn semantics: a zero-IQR feature (the constant 0.0 fillers)
-    # divides by 1.0, not 0
-    return F.when(iqr > 0, iqr).otherwise(F.lit(1.0))
-
-
-def robust_scale(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Fit median/IQR on the train split, transform ALL rows.
-
-    Returns (scaled_frame, params)."""
-    split_df = with_split(df)
-    params = scaler_params(split_df)
-    scaled = split_df.join(F.broadcast(params), "slice")
-    for f in FEATURES:
-        scale = _iqr_scale(F.col(f"{f}_iqr"))
-        scaled = scaled.withColumn(f, (F.col(f) - F.col(f"{f}_center")) / scale)
-    return scaled.select(*_SPLIT_KEYS, *FEATURES), params
-
-
-def scaler_columns(rows) -> tuple[Column, Column]:
-    """Collected ``scaler_params`` rows → (centers, scales): two
-    array<double> columns of literals, read at each row's slice, that
-    apply the same doubles ``robust_scale`` reads off its params join."""
-
-    def per_slice(values) -> Column:
-        pairs = [
-            c
-            for r in sorted(rows, key=lambda r: r["slice"])
-            for c in (F.lit(r["slice"]), F.array(*[values(r, f) for f in FEATURES]))
-        ]
+    def per_slice(value) -> Column:
+        pairs = []
+        for r in rows:
+            pairs += [F.lit(r["slice"]), F.array(*[value(r, f) for f in FEATURES])]
         return F.create_map(*pairs)[F.col("slice")]
 
+    def scale(r, f) -> Column:
+        iqr = F.lit(r[f"{f}_iqr"]).cast("double")
+        return F.when(iqr > 0, iqr).otherwise(F.lit(1.0))
+
     centers = per_slice(lambda r, f: F.lit(r[f"{f}_center"]).cast("double"))
-    scales = per_slice(lambda r, f: _iqr_scale(F.lit(r[f"{f}_iqr"]).cast("double")))
-    return centers, scales
-
-
-def scale_by(split_df: DataFrame, centers: Column, scales: Column) -> DataFrame:
-    """``robust_scale``'s transform with ``scaler_columns`` literals in
-    place of the params join: the same arithmetic, no second aggregate."""
-    return split_df.select(
-        *_SPLIT_KEYS,
+    scales = per_slice(scale)
+    scaled = split_df.select(
+        "slice",
+        "window_start",
+        "rn",
+        "n",
+        "split",
         *[
             ((F.col(f) - F.element_at(centers, i + 1)) / F.element_at(scales, i + 1)).alias(f)
             for i, f in enumerate(FEATURES)
         ],
     )
+    return scaled, params, (centers, scales)
 
 
 def as_vector(df: DataFrame, out: str = "x") -> DataFrame:

@@ -55,7 +55,7 @@ def huber_fit(
 def scalar_design(spark: SparkSession, sf_dir: str, p: int = 3) -> DataFrame:
     """AR design with the FIRST feature's current value as scalar target
     (throughput equation of the VAR system), train split only."""
-    scaled, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
+    scaled, _, _ = robust_scale(feature_frame(kpi36(spark, sf_dir)))
     d = lag_design(scaled, p=p).filter(F.col("split") == "train")
     return d.select(
         "slice", "x", F.element_at("y", 1).cast("double").alias("y_t")

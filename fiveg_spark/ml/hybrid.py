@@ -9,7 +9,7 @@ Distributed layout of one forecast pass:
   kpi36 → 7 features, checkpointed           [1 shuffle: KPI agg, pruned
                                               to 5 KPIs, run once]
     → RobustScaler params (one row per slice), collected and applied
-      as literals
+      as literals (``features.robust_scale``)
     → scaled lag design, checkpointed        [window functions on the
                                               series key]
     → VAR fit: partial Gram mapInPandas + solve   [tiny shuffle, D6]
@@ -31,19 +31,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fiveg_spark.ml.features import (
-    FEATURES,
-    feature_frame,
-    scale_by,
-    scaler_columns,
-    scaler_params,
-    with_split,
-)
-from fiveg_spark.ml.model import init_weights, predict_residuals
+from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale
+from fiveg_spark.ml.model import DTYPE, forward, init_weights, score_chunks
 from fiveg_spark.ml.sequences import preceding_windows
 from fiveg_spark.ml.var import lag_design, normal_equations, solve_coefficients
 from fiveg_spark.operators.kpi import kpi36
@@ -92,20 +86,12 @@ def residual_frame(design: DataFrame, coeffs_bc) -> DataFrame:
 
 
 def _scaled_design(spark: SparkSession, sf_dir: str, p: int):
-    """kpi36 → 7 hourly features with their split → RobustScaler → lag
-    design.  Returns (design, scaler_params, (centers, scales)).
-
-    The features are aggregated once and checkpointed: they feed the
-    params AND the design.  The params are collected (one row per
-    slice) and applied as literals (``scaler_columns``), so neither the
-    design nor the caller's plan re-runs their aggregate.  The design
-    is checkpointed too: it feeds the Gram solve AND the residual
-    scorer.  Both frames are hourly and tiny (~720 rows/slice)."""
-    features = with_split(feature_frame(kpi36(spark, sf_dir))).localCheckpoint()
-    params = scaler_params(features)
-    centers, scales = scaler_columns(params.collect())
-    design = lag_design(scale_by(features, centers, scales), p=p).localCheckpoint()
-    return design, params, (centers, scales)
+    """kpi36 → 7 hourly features → RobustScaler → lag design,
+    checkpointed: it feeds the Gram solve AND the residual scorer, and
+    is hourly and tiny (~720 rows/slice).  Returns (design,
+    scaler_params, (centers, scales)) — ``robust_scale``'s literals."""
+    scaled, params, literals = robust_scale(feature_frame(kpi36(spark, sf_dir)))
+    return lag_design(scaled, p=p).localCheckpoint(), params, literals
 
 
 def _var_fit(design: DataFrame) -> dict[str, np.ndarray]:
@@ -129,6 +115,43 @@ def residual_pipeline(
         resid, "resid", window, ("slice", "window_start", "split", "target", "seq")
     )
     return resid, sequences, params
+
+
+def predict_residuals(
+    resid: DataFrame, weights_bc, window: int, splits: tuple[str, ...]
+) -> DataFrame:
+    """Score one broadcast weight pytree per residual series: one
+    ``resid`` vector per (slice, window_start).
+
+    One applyInPandas per slice reads the series once, takes every
+    row's preceding ``window`` residuals as a strided view
+    (``sliding_window_view``: no per-row lists, no collect_list window)
+    and runs the forward only on rows with a full window whose
+    ``split`` is in ``splits``, in ``score_chunks``' CHUNK-sized
+    chunks.  Those rows come back with all of ``resid``'s columns plus
+    ``resid_pred``.  ``model.predict_residuals`` is the same forward
+    over precomputed ``seq`` cells."""
+    keep = list(splits)
+
+    def score_series(pdf: pd.DataFrame) -> pd.DataFrame:
+        w = weights_bc.value
+        pdf = pdf.sort_values("window_start", ignore_index=True)
+        rows = np.arange(window, len(pdf))
+        rows = rows[pdf["split"].iloc[window:].isin(keep).values]
+        out = pdf.iloc[rows]
+        if len(rows) == 0:
+            return out.assign(resid_pred=pd.Series(dtype=object))
+        R = np.asarray(list(pdf["resid"]), dtype=DTYPE)
+        # windows[i] = rows i .. i+window-1, the history of row i+window;
+        # fancy indexing gathers only the scored windows
+        windows = sliding_window_view(R, window, axis=0).transpose(0, 2, 1)
+        preds = score_chunks(windows[rows - window], lambda X: forward(X, w))
+        return out.assign(resid_pred=[p.tolist() for p in preds])
+
+    schema = T.StructType(
+        resid.schema.fields + [T.StructField("resid_pred", T.ArrayType(T.DoubleType()))]
+    )
+    return resid.groupBy("slice").applyInPandas(score_series, schema=schema)
 
 
 def hybrid_forecast(

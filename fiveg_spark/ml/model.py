@@ -15,11 +15,10 @@ anyway, no per-step copies — and records nothing otherwise, so
 inference and training run the same arithmetic.
 
 Execution model: weights are a small pytree of numpy arrays, broadcast
-once; ``predict_residuals`` runs chunked vectorized forward passes on
-the executors — per Arrow batch of precomputed (window × k) sequences
-(``mapInPandas``), or per series straight off a residual series, whose
-windows are strided views (``applyInPandas``).  No driver tensor, no
-per-row Python.
+once; scoring runs chunked vectorized forward passes (``score_chunks``)
+on the executors — per Arrow batch of (window × k) sequences here
+(``predict_residuals``), per residual series in the forecast
+(``hybrid.predict_residuals``).  No driver tensor, no per-row Python.
 """
 
 from __future__ import annotations
@@ -28,7 +27,6 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -241,8 +239,8 @@ CHUNK = 128  # sequences per forward pass: bounds peak working memory
 # (MHA scores dominate: CHUNK·4·60·60 f32 ≈ 7 MB) so executor memory
 # stays flat regardless of Arrow batch size, and freshly-faulted pages
 # get reused by every subsequent chunk.  Which rows share a chunk moves
-# a row's float32 output by up to ~1e-6, so chunks follow each series,
-# never a partition's hash mix of series.
+# a row's float32 output by up to ~1e-6, so the forecast chunks each
+# series on its own (``hybrid.predict_residuals``).
 
 
 def score_chunks(seqs: np.ndarray, predict) -> np.ndarray:
@@ -269,54 +267,13 @@ def pred_frame(pdf: pd.DataFrame, preds: np.ndarray) -> pd.DataFrame:
     )
 
 
-def predict_residuals(
-    frame: DataFrame,
-    weights_bc,
-    window: int | None = None,
-    splits: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Score one broadcast weight pytree.
+def predict_residuals(sequences: DataFrame, weights_bc) -> DataFrame:
+    """mapInPandas scoring of one broadcast weight pytree over one
+    ``seq`` cell per row, each Arrow batch scored as it streams."""
 
-    Without ``window``, ``frame`` holds one ``seq`` cell per row; each
-    Arrow batch is scored as it streams (mapInPandas) into PRED_SCHEMA.
-
-    With ``window``, ``frame`` is a residual series: one ``resid`` vector
-    per (slice, window_start).  One applyInPandas per slice reads the
-    series once, takes every row's preceding ``window`` residuals as a
-    strided view (``sliding_window_view``: no per-row lists, no
-    collect_list window) and runs the forward only on rows with a full
-    window whose ``split`` is in ``splits`` (all rows if None).  Those
-    rows come back with all of ``frame``'s columns plus ``resid_pred``."""
-    if window is None:
-
-        def score(batches):
-            w = weights_bc.value
-            for pdf in batches:
-                if len(pdf):
-                    preds = score_chunks(pdf["seq"].values, lambda X: forward(X, w))
-                    yield pred_frame(pdf, preds)
-
-        return frame.mapInPandas(score, schema=PRED_SCHEMA)
-
-    keep = None if splits is None else list(splits)
-
-    def score_series(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(batches):
         w = weights_bc.value
-        pdf = pdf.sort_values("window_start", ignore_index=True)
-        rows = np.arange(window, len(pdf))
-        if keep is not None:
-            rows = rows[pdf["split"].iloc[window:].isin(keep).values]
-        out = pdf.iloc[rows]
-        if len(rows) == 0:
-            return out.assign(resid_pred=pd.Series(dtype=object))
-        R = np.asarray(list(pdf["resid"]), dtype=DTYPE)
-        # windows[i] = rows i .. i+window-1, the history of row i+window;
-        # fancy indexing gathers only the scored windows
-        windows = sliding_window_view(R, window, axis=0).transpose(0, 2, 1)
-        preds = score_chunks(windows[rows - window], lambda X: forward(X, w))
-        return out.assign(resid_pred=[p.tolist() for p in preds])
+        for pdf in batches:
+            yield pred_frame(pdf, score_chunks(pdf["seq"].values, lambda X: forward(X, w)))
 
-    schema = T.StructType(
-        frame.schema.fields + [T.StructField("resid_pred", T.ArrayType(T.DoubleType()))]
-    )
-    return frame.groupBy("slice").applyInPandas(score_series, schema=schema)
+    return sequences.mapInPandas(score, schema=PRED_SCHEMA)

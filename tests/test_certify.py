@@ -114,7 +114,7 @@ def test_ridge_cert_invariants_and_augmented_lstsq_parity(spark):
     # independent algorithm: ridge via AUGMENTED least squares
     # [X; sqrt(lam) I] — lstsq, not a Gram solve — must agree with the
     # certified Gram-path coefficients
-    scaled, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
+    scaled, _, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
     design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train")
     gram = collect_gram(normal_equations(design))
     one = design.filter(F.col("slice") == sorted(gram)[0])
@@ -167,7 +167,7 @@ def test_var_order_cert_theorems_and_residual_parity(spark):
     # independent algorithm: EXPLICIT residuals via lstsq on the
     # truncated design columns — ln|R'R/n| must match the Gram-identity
     # logdet (E = Y'Y - (X'Y)'B) the cert computes, per candidate order
-    scaled, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
+    scaled, _, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
     design = lag_design(scaled, p=P_LAGS).filter(F.col("split") == "train")
     s0 = sorted(crits)[0]
     one = design.filter(F.col("slice") == s0)

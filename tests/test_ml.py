@@ -23,7 +23,7 @@ from tests.conftest import SF_DIR
 
 @pytest.fixture(scope="module")
 def scaled(spark):
-    df, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
+    df, _, _ = robust_scale(feature_frame(kpi36(spark, SF_DIR)))
     df.cache().count()
     return df
 
