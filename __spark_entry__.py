@@ -131,26 +131,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "kpi36": _kpi.kpi36,
     }
-    deferred: set[str] = set()
     for mod in _MODULES:
         for query in mod.QUERIES:
             q[query.name] = query.run
-            if getattr(query, "deferred", False):
-                deferred.add(query.name)
     oracles = oracle_sql()
 
-    def slot(item: tuple[str, Callable]) -> tuple[int, bool]:
+    def slot(item: tuple[str, Callable]) -> int:
         name = item[0]
         if name == "kpi36" and name not in _DRIVER_CERTIFIED:
-            return (0, False)  # flagship leads until its first certification
+            return 0  # flagship leads until its first certification
         if name not in oracles:
-            return (3, False)  # rows-only: can never hash-match, out of the window
-        tier = 2 if name in _DRIVER_CERTIFIED else 1
-        # mid-round registrations sort behind the frozen never-certified
-        # window so they can't displace a name from its 50 slots
-        return (tier, name in deferred)
+            return 3  # rows-only: can never hash-match, out of the window
+        return 2 if name in _DRIVER_CERTIFIED else 1
 
-    return dict(sorted(q.items(), key=lambda item: (*slot(item), item[0])))
+    return dict(sorted(q.items(), key=lambda item: (slot(item), item[0])))
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1079,18 +1079,12 @@ QUERIES = [
     Query(
         "hybrid_train_cert", hybrid_train_cert, _HYBRID_TRAIN_CERT_ORACLE,
     ),
-    # new r7 (non-deferred: the r6 window cleared the backlog, so new
-    # registrations claim certification slots immediately)
     Query(
         "hybrid_conformal_radii",
         hybrid_conformal_cert,
         _hybrid_conformal_oracle(),
     ),
-    # new r7 (second wave), non-deferred
     Query("ridge_cert", ridge_cert, _RIDGE_CERT_ORACLE),
-    # new r7 third wave, registered AFTER the window filled:
-    # deferred sorts it behind the 50 never-certified names
-    # (certifies in round 8)
     Query("var_order_cert", var_order_cert, _VAR_ORDER_ORACLE),
     Query("granger_cert", granger_cert, _GRANGER_ORACLE),
 ]

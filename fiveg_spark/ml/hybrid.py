@@ -47,7 +47,6 @@ _RESID_SCHEMA = T.StructType(
         T.StructField("slice", T.StringType()),
         T.StructField("window_start", T.TimestampType()),
         T.StructField("split", T.StringType()),
-        T.StructField("y", T.ArrayType(T.DoubleType())),
         T.StructField("var_pred", T.ArrayType(T.DoubleType())),
         T.StructField("resid", T.ArrayType(T.DoubleType())),
     ]
@@ -74,7 +73,6 @@ def residual_frame(design: DataFrame, coeffs_bc) -> DataFrame:
                             "slice": slice_name,
                             "window_start": g["window_start"].values,
                             "split": g["split"].values,
-                            "y": [r.tolist() for r in Y],
                             "var_pred": [r.tolist() for r in pred],
                             "resid": [r.tolist() for r in Y - pred],
                         }
@@ -170,9 +168,7 @@ def hybrid_forecast(
     sc = spark.sparkContext
     design, _, (centers, scales) = _scaled_design(spark, sf_dir, p)
     coeffs = _var_fit(design)
-    resid = residual_frame(design, sc.broadcast(coeffs)).select(
-        "slice", "window_start", "split", "var_pred", "resid"
-    )
+    resid = residual_frame(design, sc.broadcast(coeffs))
     preds = predict_residuals(
         resid, sc.broadcast(init_weights()), window=window, splits=splits
     )

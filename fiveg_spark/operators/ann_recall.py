@@ -267,17 +267,14 @@ ORDER BY shortlist
 
 QUERIES = [
     Query("ann_recall_matrix", ann_recall_matrix, _ANN_RECALL_ORACLE),
-    # r8 third wave; deferred flag dropped at r9 start (standing mechanic)
     Query(
         "ann_ivf_probe_ladder", ann_ivf_probe_ladder, _PROBE_LADDER_ORACLE,
     ),
-    # new r9, non-deferred
     Query(
         "ann_pq_rerank_ladder", ann_pq_rerank_ladder, _RERANK_LADDER_ORACLE,
     ),
-    # per-method driver stamps (round-6 conversion of the rows-only
-    # ann_*_topk / mllib_ann_topk registrations; raw top-k surfaces stay
-    # pytest-pinned).  Registered mid-round 6, certified r6.
+    # per-method driver stamps (the raw ann_*_topk / mllib_ann_topk
+    # top-k surfaces stay pytest-pinned)
     Query("ann_lsh_recall", _method_query("lsh"), _row_oracle("lsh")),
     Query("ann_ivf_recall", _method_query("ivf"), _row_oracle("ivf")),
     Query("ann_pq_recall", _method_query("pq"), _row_oracle("pq")),

@@ -579,11 +579,6 @@ QUERIES.extend([
 ])
 
 
-# --------------------------------------------------------------------------
-# r11 pre-fill (flags dropped at r11 start; in the r11 certification window)
-# --------------------------------------------------------------------------
-
-
 def _rollback_audit_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A23's ROLLBACK path certified: three committed crawl versions,
     then rollback_to(2).  Rollback is documented-DESTRUCTIVE (stricter
@@ -1005,7 +1000,7 @@ def _stream_cdc_apply_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from fiveg_spark.sources import cdc
-    from fiveg_spark.streaming.cdc_sink import attach_cdc_sink
+    from fiveg_spark.streaming.cdc_sink import foreach_batch_cdc
 
     root = _scratch()
     path = os.path.join(root, "orders_cdc")
@@ -1061,8 +1056,12 @@ def _stream_cdc_apply_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = attach_cdc_sink(changes, path, ckpt, "k").trigger(
-            availableNow=True).start()
+        q = (
+            changes.writeStream.foreachBatch(foreach_batch_cdc(path, "k"))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination(300)
 
         out = (
@@ -1419,8 +1418,14 @@ def _stream_agg_merge_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = agg_sink.attach_agg_sink(rows, path, ckpt, "r13cert").trigger(
-            availableNow=True).start()
+        q = (
+            rows.writeStream.foreachBatch(
+                agg_sink.foreach_batch_agg(path, "r13cert")
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination(300)
 
         out = (

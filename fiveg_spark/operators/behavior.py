@@ -1465,29 +1465,20 @@ QUERIES = [
     materialized_backed("markov_stationarity", _markov_stationarity_parts, ("events",)),
     sql_backed("lorenz_curve_users", _lorenz_sql, ("events",)),
     materialized_backed("customer_migration_matrix", _migration_parts, ("events",)),
-    # r8 third wave; deferred flag dropped at r9 start (standing mechanic)
     materialized_backed("user_type_affinity", _affinity_parts, ("events",)),
     materialized_backed("event_cooccurrence_lift", _cooccurrence_parts, ("events",)),
     sql_backed("kaplan_meier_lifetime", _kaplan_meier_sql, ("events",)),
     sql_backed("transition_matrix", _transition_matrix_sql, ("events",)),
     sql_backed("rfm_segments", _rfm_segments_sql, ("events",)),
-    # registered mid-round 6: sorts behind the frozen window
     materialized_backed(
         "attribution_credit", _attribution_parts, ("events",),
     ),
-    # new r7, non-deferred
     materialized_backed("sequence_entropy_rate", _entropy_rate_parts, ("events",)),
-    # new r7 third wave, non-deferred (claims one of the window's 5
-    # free slots — 45 never-certified + these keep the 50 exact)
     sql_backed("session_paths", _session_paths_sql, ("events",)),
-    # new r7 third wave, registered AFTER the window filled:
-    # deferred sorts it behind the 50 never-certified names
-    # (certifies in round 8)
     sql_backed("session_stats", _session_stats_sql, ("events",)),
     sql_backed(
         "growth_accounting", _growth_accounting_sql, ("events",),
     ),
-    # new r9, non-deferred
     sql_backed("semi_markov_holding_times", _semi_markov_sql, ("events",)),
     materialized_backed("dau_overlap_jaccard", _dau_overlap_parts, ("events",)),
     sql_backed("activity_by_tenure", _activity_by_tenure_sql, ("events",)),
@@ -1497,17 +1488,11 @@ QUERIES = [
                         _second_session_latency_parts, ("events",)),
     materialized_backed("user_transfer_entropy",
                         _user_transfer_entropy_parts, ("events",)),
-    # r9 third wave, registered AFTER the window filled: deferred
-    # sorts it behind the 50 never-certified names (certifies in r10)
     sql_backed("user_specialization", _user_specialization_sql, ("events",)),
     sql_backed("order_cadence_regularity", _order_cadence_sql,
                ("orders", "customer")),
 ]
 
-
-# --------------------------------------------------------------------------
-# r11 pre-fill, wave 2 (flags dropped at r11 start)
-# --------------------------------------------------------------------------
 
 DORMANCY_DAYS = 7.0
 

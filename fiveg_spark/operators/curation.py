@@ -618,17 +618,14 @@ def _frontier_sql(d: str) -> str:
 QUERIES = [
     sql_backed("stratified_sample", _stratified_sample_sql, ("documents",)),
     sql_backed("quality_trend_by_source", _quality_trend_sql, ("documents",)),
-    # r8 third wave; deferred flag dropped at r9 start (standing mechanic)
     sql_backed("quality_length_frontier", _frontier_sql, ("documents",)),
     sql_backed("weighted_sample", _weighted_sample_sql, ("documents",)),
     sql_backed("per_source_topk_sample", _topk_sample_sql, ("documents",)),
     sql_backed("hash_split", _hash_split_sql, ("documents",)),
     sql_backed("curation_funnel", _curation_sql, ("documents",)),
-    # registered mid-round 6: sorts behind the frozen window
     sql_backed("training_order", _training_order_sql, ("documents",)),
     sql_backed("snapshot_diff", _snapshot_diff_sql, ("documents",)),
     sql_backed("quality_prune", _quality_prune_sql, ("documents",)),
-    # new r7, non-deferred
     sql_backed("dup_rate_sample_audit", _dup_audit_sql, ("documents",)),
     materialized_backed(
         "quality_dup_calibration", _quality_dup_calibration_parts, ("documents",),

@@ -1166,7 +1166,6 @@ QUERIES = [
     sql_backed(
         "incremental_minhash_pairs", _incremental_minhash_sql, ("documents",),
     ),
-    # registered mid-round 6: sorts behind the frozen window
     # mode="inline": the positions part is an EXPLODED frame (one row
     # per token, span strings attached — several times the corpus
     # bytes) referenced exactly twice; materializing it writes more
@@ -1183,13 +1182,8 @@ QUERIES = [
     materialized_backed(
         "minhash_recall_vs_exact", _minhash_recall_parts, ("documents",),
     ),
-    # new r7, non-deferred
     sql_backed("containment_pairs", _containment_sql, ("documents",)),
-    # new r7 (second wave), non-deferred
     materialized_backed("minhash_band_curve", _band_curve_parts, ("documents",)),
-    # new r7 third wave, registered AFTER the window filled:
-    # deferred sorts it behind the 50 never-certified names
-    # (certifies in round 8)
     materialized_backed(
         "dup_pressure_by_source", _dup_pressure_parts, ("documents",),
 

@@ -441,11 +441,6 @@ QUERIES = [
 ]
 
 
-# --------------------------------------------------------------------------
-# r11 pre-fill (flags dropped at r11 start; in the r11 certification window)
-# --------------------------------------------------------------------------
-
-
 def _hour_entropy_by_band_parts(d: str) -> tuple[list[tuple[str, str]], str]:
     # C159 — diurnal concentration by activity band: per-user Shannon
     # entropy (nats) of the hour-of-day profile, averaged within

@@ -344,7 +344,6 @@ def _dedup_representatives_oracle() -> str:
 
 QUERIES = [
     Query("dedup_clusters", dedup_clusters, "WITH RECURSIVE " + _dedup_clusters_oracle().lstrip().removeprefix("WITH ")),
-    # registered mid-round 6: sorts behind the frozen window
     Query(
         "cluster_weights",
         cluster_weights,

@@ -311,10 +311,7 @@ QUERIES = [
     ),
     sql_backed("arrival_order_inversions", _arrival_inversions_sql,
                ("events",)),
-    # r9 third wave, registered AFTER the window filled: deferred
-    # sorts it behind the 50 never-certified names (certifies in r10)
     sql_backed("arrival_burstiness", _arrival_burstiness_sql, ("events",)),
-    # new r11, deferred (r12 pre-fill)
     sql_backed("source_ingestion_burstiness",
                _source_ingestion_burstiness_sql, ("documents",)),
 ]

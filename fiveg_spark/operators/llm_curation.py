@@ -756,8 +756,6 @@ def _dup_ngram_mass_parts(d: str) -> tuple[list[tuple[str, str]], str]:
 
 
 QUERIES = [
-    # r9 third wave, registered AFTER the window filled: deferred
-    # sorts it behind the 50 never-certified names (certifies in r10)
     materialized_backed("dup_ngram_mass_by_source", _dup_ngram_mass_parts,
                         ("documents",)),
     sql_backed("boilerplate_ngrams", _boilerplate_ngrams_sql, ("documents",)),
@@ -772,7 +770,6 @@ QUERIES = [
     materialized_backed(
         "contamination_matrix", _contamination_matrix_parts, ("documents",),
     ),
-    # registered mid-round 6: sorts behind the frozen window
     sql_backed(
         "domain_mixture_weights", _domain_reweight_sql, ("documents",),
     ),

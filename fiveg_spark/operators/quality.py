@@ -622,10 +622,7 @@ QUERIES = [
     sql_backed("window_functions_suite", _window_suite_sql, ("orders",)),
     sql_backed("interval_join_stats", _interval_join_sql, ("orders", "events")),
     sql_backed("interval_join_binned", _interval_join_binned_sql, ("orders", "events")),
-    # registered mid-round-5 after the certification window froze: stays
-    # behind the 50 never-certified slots until CORRECTNESS_r05 lands
     sql_backed("benford_digits", _benford_digits_sql, ("orders",)),
-    # new r9, non-deferred
     sql_backed("fk_orphan_audit", _fk_orphan_audit_sql,
                ("lineitem", "orders", "part", "supplier", "customer",
                 "nation")),
@@ -635,11 +632,6 @@ QUERIES = [
     materialized_backed("column_stat_drift", _column_stat_drift_parts,
                         ("events",)),
 ]
-
-
-# --------------------------------------------------------------------------
-# r11 pre-fill, wave 2 (flags dropped at r11 start)
-# --------------------------------------------------------------------------
 
 
 def _fk_fanout_sql(d: str) -> str:

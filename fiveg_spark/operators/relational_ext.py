@@ -1116,7 +1116,6 @@ QUERIES = [
                ("orders", "customer")),
     materialized_backed("returnflag_quarter_shift", _returnflag_shift_parts,
                         ("lineitem",)),
-    # r8 third wave; deferred flag dropped at r9 start (standing mechanic)
     sql_backed("revenue_waterfall", _revenue_waterfall_sql, ("lineitem",)),
     sql_backed("revenue_gini_by_segment", _revenue_gini_sql,
                ("customer", "orders")),
@@ -1129,8 +1128,6 @@ QUERIES = [
     sql_backed("event_type_pivot", _event_type_pivot_sql, ("events",)),
     sql_backed("top_customers_per_nation", _top_customers_per_nation_sql, ("customer", "orders")),
     sql_backed("balance_bands", _balance_bands_sql, ("customer",)),
-    # new r9, non-deferred (no never-certified backlog: sorts into the
-    # window front automatically)
     sql_backed("yoy_revenue_growth", _yoy_revenue_growth_sql,
                ("lineitem", "orders", "customer", "nation")),
     sql_backed("brand_price_realization", _brand_price_realization_sql,
@@ -1146,8 +1143,6 @@ QUERIES = [
     sql_backed("revenue_drawdown", _revenue_drawdown_sql, ("orders",)),
     sql_backed("ship_sla_attainment", _ship_sla_sql, ("lineitem", "orders")),
     sql_backed("customer_hhi_yearly", _customer_hhi_yearly_sql, ("orders",)),
-    # r9 third wave, registered AFTER the window filled: deferred
-    # sorts them behind the 50 never-certified names (certify in r10)
     sql_backed("nation_rank_stability", _nation_rank_stability_sql,
                ("orders", "customer")),
     sql_backed("order_status_aging", _order_status_aging_sql, ("orders",)),

@@ -693,16 +693,12 @@ QUERIES = [
     sql_backed("concurrency_profile", _concurrency_sql, ("events",)),
     sql_backed("countmin_estimates", _countmin_sql, ("documents",)),
     materialized_backed("kmv_distinct_rollup", _kmv_parts, ("events",)),
-    # registered mid-round 6: sorts behind the frozen window
     materialized_backed(
         "kmv_set_ops", _kmv_set_ops_parts, ("events",),
     ),
     materialized_backed(
         "theta_sketch_overlap", _theta_overlap_parts, ("documents",),
     ),
-    # new r7 third wave, registered AFTER the window filled:
-    # deferred sorts it behind the 50 never-certified names
-    # (certifies in round 8)
     materialized_backed(
         "littles_law_orders", _littles_law_parts, ("orders", "lineitem"),
 

@@ -1469,9 +1469,7 @@ QUERIES = [
         "hybrid_retrieval_fusion", _hybrid_fusion_parts,
         ("documents", "embeddings"),
     ),
-    # new r7, non-deferred
     sql_backed("embedding_truncation_eval", _truncation_eval_sql, ("embeddings",)),
-    # new r7 third wave, non-deferred (window slot 50 of 50)
     materialized_backed("index_freshness_audit", _index_freshness_parts, ("embeddings",)),
     sql_backed("rrf_fusion", _rrf_sql, ("embeddings",)),
     sql_backed("embedding_quantization", _quantization_sql, ("embeddings",)),
@@ -1483,34 +1481,26 @@ QUERIES = [
     # as a hash mismatch, not a silent quality drop.
     Query("embedding_dedup_ivf", embedding_dedup_ivf, _embedding_dedup_sql("duckdb")),
     sql_backed("label_centroids", _label_centroids_sql, ("embeddings",)),
-    # new r7 third wave, registered AFTER the window filled:
-    # deferred sorts it behind the 50 never-certified names
-    # (certifies in round 8)
     materialized_backed(
         "embedding_anisotropy", _anisotropy_parts, ("embeddings",),
 
     ),
-    # r8 third wave; deferred flag dropped at r9 start (standing mechanic)
     sql_backed("embedding_dim_profile", _dim_profile_sql, ("embeddings",)),
     materialized_backed(
         "embedding_label_separation", _label_separation_parts, ("embeddings",),
     ),
-    # new r9, non-deferred
     materialized_backed(
         "label_centroid_matrix", _label_centroid_matrix_parts, ("embeddings",),
     ),
     sql_backed("embedding_component_moments", _component_moments_sql,
                ("embeddings",)),
-    # r9 third wave, registered AFTER the window filled: deferred
-    # sorts it behind the 50 never-certified names (certifies in r10)
     materialized_backed("source_embedding_coherence", _source_coherence_parts,
                         ("documents", "embeddings")),
     materialized_backed("quantization_clip_eval", _quant_clip_eval_parts,
                         ("embeddings",)),
-    # new r11, deferred (r12 pre-fill)
     materialized_backed("quantization_component_clip_eval",
                         _quant_component_clip_parts, ("embeddings",)),
-    # new r13: E138 — quantized-domain retrieval recall, end-to-end
+    # E138 — quantized-domain retrieval recall, end-to-end
     materialized_backed("int8_ann_recall", _int8_ann_recall_parts,
                         ("embeddings",)),
 ]

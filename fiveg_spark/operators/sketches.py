@@ -472,11 +472,9 @@ QUERIES = [
     # exact top-k anchor + in-row Misra-Gries bound booleans; the raw
     # estimate-ordered diagnostic surface stays pytest-pinned.
     Query("heavy_hitters", heavy_hitters_certified, _HEAVY_HITTERS_ORACLE),
-    # registered mid-round 6: sorts behind the frozen window
     Query(
         "hll_sliding_actives", hll_sliding_actives, _HLL_SLIDING_ORACLE,
     ),
-    # new r7, non-deferred
     materialized_backed("bloom_membership", _bloom_parts, ("events",)),
 ]
 

@@ -678,7 +678,6 @@ QUERIES = [
     sql_backed("chunk_overlap_audit", _chunk_audit_sql, ("documents",)),
     sql_backed("supplier_lead_time_trend", _lead_time_trend_sql,
                ("lineitem", "orders", "supplier", "nation")),
-    # r8 third wave; deferred flag dropped at r9 start (standing mechanic)
     materialized_backed("priority_latency_anova", _priority_anova_parts,
                         ("lineitem", "orders")),
     materialized_backed("jackknife_ratio_ci", _jackknife_parts, ("events",)),
@@ -686,6 +685,5 @@ QUERIES = [
     sql_backed("gini_token_concentration", _gini_sql, ("documents",)),
     sql_backed("event_time_association", _assoc_sql, ("events",)),
     sql_backed("doc_chunks", _doc_chunks_sql, ("documents",)),
-    # registered mid-round 6: sorts behind the frozen window
     sql_backed("evt_tail_fit", _evt_tail_sql, ("events",)),
 ]

@@ -30,10 +30,11 @@ scratch is removed — the returned frame owns its rows, never the
 deleted files.
 
 Scale: the replay loop is the certification HARNESS, not the
-production path (that is the checkpointed stream each sink's
-``attach_*`` wires); per batch, every sink here does one bounded
-aggregate + one append, which is the shape that survives 100 TB — see
-each sink module's header for its own scale argument.
+production path (that is a checkpointed stream handing the sink's
+``foreach_batch_*`` to ``writeStream.foreachBatch``); per batch, every
+sink here does one bounded aggregate + one append, which is the shape
+that survives 100 TB — see each sink module's header for its own scale
+argument.
 
 Reference scope: beyond-reference production surface (the reference's
 streaming job hardcodes one pipeline, KafkaKpiPipeline.scala:227-300;
@@ -993,11 +994,6 @@ QUERIES.append(
     Query("stream_tdigest_store_parity", _tdigest_store_run,
           _tdigest_store_oracle())
 )
-
-
-# --------------------------------------------------------------------------
-# r11 pre-fill (flags dropped at r11 start; in the r11 certification window)
-# --------------------------------------------------------------------------
 
 
 def _hll_store_run(spark: SparkSession, sf_dir: str) -> DataFrame:

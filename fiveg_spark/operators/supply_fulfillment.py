@@ -443,11 +443,6 @@ QUERIES = [
 ]
 
 
-# --------------------------------------------------------------------------
-# r11 pre-fill (flags dropped at r11 start; in the r11 certification window)
-# --------------------------------------------------------------------------
-
-
 def _discount_depth_sql(d: str) -> str:
     # C156 — are expensive items discounted MORE?  Per extendedprice
     # quartile (exact global bounds broadcast): discounted-line share,
@@ -609,11 +604,6 @@ QUERIES.extend([
     sql_backed("part_name_token_stats", _part_name_tokens_sql,
                ("part",)),
 ])
-
-
-# --------------------------------------------------------------------------
-# r11 pre-fill, wave 2 (flags dropped at r11 start)
-# --------------------------------------------------------------------------
 
 
 def _nrr_parts(d: str) -> tuple[list[tuple[str, str]], str]:

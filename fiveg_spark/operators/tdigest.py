@@ -179,6 +179,5 @@ ORDER BY grain
 """
 
 QUERIES = [
-    # registered mid-round 6: sorts behind the frozen window
     Query("tdigest_quantile_rollup", tdigest_rollup, _TDIGEST_ORACLE),
 ]

@@ -713,14 +713,11 @@ QUERIES = [
     sql_backed("text_quality", _text_quality_sql, ("documents",)),
     sql_backed("token_counts", _token_counts_sql, ("documents",)),
     sql_backed("doc_fingerprint", _doc_fingerprint_sql, ("documents",)),
-    # registered mid-round 6: sorts behind the frozen window
     sql_backed("text_normalize", _text_normalize_sql, ("documents",)),
-    # new r7, non-deferred
     materialized_backed("bm25_retrieval", _bm25_parts, ("documents",)),
     materialized_backed(
         "retrieval_eval_lexical", _retrieval_eval_parts, ("documents",),
     ),
-    # new r9, non-deferred
     sql_backed("sentence_stats", _sentence_stats_sql, ("documents",)),
     sql_backed("char_class_profile", _char_class_profile_sql, ("documents",)),
     sql_backed("url_markup_screen", _url_markup_screen_sql, ("documents",)),

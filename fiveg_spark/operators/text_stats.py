@@ -1106,7 +1106,6 @@ QUERIES = [
     materialized_backed("bpe_pair_stats", _bpe_pair_stats_parts, ("documents",)),
     materialized_backed("vocab_jaccard_matrix", _vocab_jaccard_parts, ("documents",)),
     sql_backed("ngram_coverage_curve", _coverage_curve_sql, ("documents",)),
-    # r8 third wave; deferred flag dropped at r9 start (standing mechanic)
     sql_backed("hapax_ratio", _hapax_sql, ("documents",)),
     sql_backed("token_entropy", _token_entropy_sql, ("documents",)),
     sql_backed("lognormal_length_fit", _lognormal_fit_sql, ("documents",)),
@@ -1115,33 +1114,20 @@ QUERIES = [
     materialized_backed("unigram_ppl", _unigram_ppl_parts, ("documents",)),
     sql_backed("bigram_ppl", _bigram_ppl_sql, ("documents",)),
     sql_backed("zipf_slope", _zipf_slope_sql, ("documents",)),
-    # registered mid-round 6: sorts behind the frozen window
     materialized_backed("ppl_buckets", _ppl_buckets_parts, ("documents",)),
-    # new r7 third wave, non-deferred (window slots 48-49 of 50)
     materialized_backed(
         "stopword_divergence", _stopword_divergence_parts, ("documents",),
     ),
     sql_backed("token_fertility", _token_fertility_sql, ("documents",)),
-    # new r7 third wave, registered AFTER the window filled:
-    # deferred sorts it behind the 50 never-certified names
-    # (certifies in round 8)
     materialized_backed("oov_rate", _oov_rate_parts, ("documents",)),
-    # new r9, non-deferred
     sql_backed("bigram_entropy_rate", _bigram_entropy_rate_sql, ("documents",)),
     sql_backed("token_length_histogram", _token_length_histogram_sql,
                ("documents",)),
-    # r9 third wave, registered AFTER the window filled: deferred
-    # sorts them behind the 50 never-certified names (certify in r10)
     materialized_backed("tfidf_source_signature",
                         _tfidf_source_signature_parts, ("documents",)),
     sql_backed("doc_entropy_screen", _doc_entropy_screen_sql,
                ("documents",)),
 ]
-
-
-# --------------------------------------------------------------------------
-# r11 pre-fill, wave 2 (flags dropped at r11 start)
-# --------------------------------------------------------------------------
 
 
 def _readability_sql(d: str) -> str:

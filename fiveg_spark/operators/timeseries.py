@@ -1106,7 +1106,6 @@ def _heatmap_sql(d: str) -> str:
 
 QUERIES = [
     sql_backed("quantile_transform", _quantile_transform_sql, ("events",)),
-    # r8 third wave; deferred flag dropped at r9 start (standing mechanic)
     sql_backed("peak_to_mean_daily", _peak_to_mean_sql, ("events",)),
     sql_backed("value_concentration_by_type", _value_concentration_sql,
                ("events",)),
@@ -1133,18 +1132,10 @@ QUERIES = [
     sql_backed("event_type_mix", _event_type_mix_sql, ("events",)),
     sql_backed("value_percentiles", _value_percentiles_sql, ("events",)),
     sql_backed("json_props_stats", _json_props_sql, ("events",)),
-    # new r7 third wave, registered AFTER the window filled:
-    # deferred sorts it behind the 50 never-certified names
-    # (certifies in round 8)
     materialized_backed(
         "trending_types", _trending_parts, ("events",),
     ),
 ]
-
-
-# --------------------------------------------------------------------------
-# r11 pre-fill, wave 2 (flags dropped at r11 start)
-# --------------------------------------------------------------------------
 
 
 def _linear_interp_sql(d: str) -> str:

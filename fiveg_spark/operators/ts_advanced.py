@@ -1897,8 +1897,6 @@ def _reciprocity_by_year_parts(d: str) -> tuple[list[tuple[str, str]], str]:
 
 QUERIES = [
     sql_backed("variance_time_curve", _variance_time_sql, ("events",)),
-    # r9 third wave, registered AFTER the window filled: deferred
-    # sorts them behind the 50 never-certified names (certify in r10)
     sql_backed("load_duration_curve", _load_duration_sql, ("events",)),
     sql_backed("acf_half_life", _acf_half_life_sql, ("events",)),
     materialized_backed("weekly_slice_correlation", _weekly_slice_corr_parts,
@@ -1934,16 +1932,13 @@ QUERIES = [
     # WITH RECURSIVE vs DuckDB recursion; cross-checks the C53 loop
     sql_backed("khop_recursive", _khop_sql,
                ("customer", "nation", "orders", "lineitem", "supplier")),
-    # new r7, non-deferred
     Query("kcore_trade_bloc", _kcore_run, _kcore_oracle()),
     materialized_backed("cross_correlation", _ccf_parts, ("events",)),
-    # new r7 (second wave), non-deferred
     Query("harmonic_centrality", _harmonic_run, _harmonic_oracle()),
     materialized_backed(
         "graph_reciprocity", _reciprocity_parts,
         ("customer", "nation", "orders", "lineitem", "supplier"),
     ),
-    # new r7 third wave, non-deferred (window slot 47 of 50)
     materialized_backed(
         "degree_assortativity", _assortativity_parts,
         ("customer", "nation", "orders", "lineitem", "supplier"),
@@ -1953,10 +1948,6 @@ QUERIES = [
     sql_backed("hurst_exponent", _hurst_sql, ("events",)),
 ]
 
-
-# --------------------------------------------------------------------------
-# r11 pre-fill, wave 2 (flags dropped at r11 start)
-# --------------------------------------------------------------------------
 
 _PC_SLICES = ("eMBB", "URLLC", "mMTC")  # kpi.packet_projection's fixed set
 

@@ -2142,7 +2142,6 @@ QUERIES = [
     sql_backed("acf_throughput", _acf_sql, ("events",)),
     sql_backed("theils_u_eval", _theils_u_sql, ("events",)),
     sql_backed("arch_lm_test", _arch_lm_sql, ("events",)),
-    # r8 third wave; deferred flags dropped at r9 start (standing mechanic)
     materialized_backed(
         "seasonal_mann_kendall", _seasonal_mk_parts, ("events",),
     ),
@@ -2163,23 +2162,17 @@ QUERIES = [
     materialized_backed(
         "iat_exponential_fit", _iat_exponential_fit_parts, ("events",),
     ),
-    # registered mid-round 6: sorts behind the frozen window
     materialized_backed(
         "feature_drift_psi", _psi_parts, ("events",),
     ),
     sql_backed("conformal_intervals", _conformal_sql, ("events",)),
-    # new r7, non-deferred
     materialized_backed("ks_two_sample", _ks_parts, ("events",)),
     materialized_backed("mann_whitney_shift", _mw_parts, ("events",)),
     materialized_backed("theilsen_trend", _theilsen_parts, ("events",)),
     sql_backed("conformal_alpha_sweep", _conformal_sweep_sql, ("events",)),
-    # new r7 (second wave), non-deferred
     sql_backed("iat_burstiness", _iat_burstiness_sql, ("events",)),
     sql_backed("page_hinkley_drift", _page_hinkley_sql, ("events",)),
     materialized_backed("cramer_von_mises", _cvm_parts, ("events",)),
-    # new r7 third wave, registered AFTER the window filled:
-    # deferred sorts it behind the 50 never-certified names
-    # (certifies in round 8)
     sql_backed(
         "calendar_outlier_days", _calendar_outlier_sql, ("events",),
 

@@ -136,6 +136,25 @@ def plan_compaction(
     )
 
 
+def install(staging: str, path: str) -> None:
+    """Swap the directory ``staging`` in at ``path``.  Two renames
+    can't be one atomic op on POSIX, so the failure window between
+    them is explicitly closed: if installing ``staging`` fails, the
+    original is put BACK under ``path`` before re-raising — a crashed
+    install never leaves the table missing.  (A hard kill between the
+    renames leaves the original recoverable at
+    ``<path>.pre-compact-<hex>``.)  The caller owns ``staging`` on
+    failure."""
+    old = f"{path}.pre-compact-{uuid.uuid4().hex[:8]}"
+    os.replace(path, old)
+    try:
+        os.replace(staging, path)
+    except BaseException:
+        os.replace(old, path)  # restore — table is intact again
+        raise
+    shutil.rmtree(old)
+
+
 def execute_compaction(
     spark: SparkSession,
     plan: CompactionPlan,
@@ -203,21 +222,8 @@ def execute_compaction(
                     f"row-conservation failure in group {i}: "
                     f"wrote {n}, planned {g.rows}"
                 )
-        # 3. atomic install (A18/A21 recipe).  Two renames can't be
-        #    one atomic op on POSIX, so the failure window between
-        #    them is explicitly closed: if installing the staging dir
-        #    fails, the original is put BACK under `path` before
-        #    re-raising — a crashed compaction never leaves the table
-        #    missing.  (A hard kill between the renames leaves the
-        #    original recoverable at `<path>.pre-compact-<hex>`.)
-        old = f"{path}.pre-compact-{uuid.uuid4().hex[:8]}"
-        os.replace(path, old)
-        try:
-            os.replace(staging, path)
-        except BaseException:
-            os.replace(old, path)  # restore — table is intact again
-            raise
-        shutil.rmtree(old)
+        # 3. atomic install (A18/A21 recipe)
+        install(staging, path)
     except BaseException:
         # Only discard staging when the table is known to be in place
         # at `path` (it always is here: either we never renamed it

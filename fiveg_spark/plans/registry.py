@@ -24,12 +24,6 @@ class Query:
     name: str
     run: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL, None → rows-only check
-    # A query registered mid-round AFTER the certification window was
-    # frozen: it stays oracle-backed (local parity gate covers it) but
-    # sorts behind the frozen never-certified set so it cannot displace
-    # a name from the driver's 50-slot window.  Flip to False (the
-    # default) once the pending CORRECTNESS round lands.
-    deferred: bool = False
 
 
 # session → {(table, sf_dir): loaded DataFrame}.  load_table pays file
@@ -61,7 +55,6 @@ def sql_backed(
     name: str,
     sql_fn: Callable[[str], str],
     tables: tuple[str, ...],
-    deferred: bool = False,
 ) -> Query:
     """Build a Query from a dialect-parameterized SQL template."""
 
@@ -69,7 +62,7 @@ def sql_backed(
         ensure_views(spark, tables, sf_dir)
         return spark.sql(sql_fn("spark"))
 
-    return Query(name=name, run=run, oracle=sql_fn("duckdb"), deferred=deferred)
+    return Query(name=name, run=run, oracle=sql_fn("duckdb"))
 
 
 _PART_MODES = ("checkpoint", "inline")
@@ -100,7 +93,6 @@ def materialized_backed(
     name: str,
     parts_fn: Callable[[str], tuple[list[tuple[str, str]], str]],
     tables: tuple[str, ...],
-    deferred: bool = False,
     mode: str = "checkpoint",
 ) -> Query:
     """sql_backed variant for queries whose tail references a derived
@@ -136,7 +128,7 @@ def materialized_backed(
             oracle = f"WITH {with_clause},\n{stripped[5:]}"
         else:
             oracle = f"WITH {with_clause}\n{tail}"
-    return Query(name=name, run=run, oracle=oracle, deferred=deferred)
+    return Query(name=name, run=run, oracle=oracle)
 
 
 # ---- shared snippet helpers (identical rounding discipline everywhere) ----

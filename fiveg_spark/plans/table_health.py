@@ -10,7 +10,7 @@ of magnitude faster.  This audit answers, from file metadata only
 - file count, total bytes, size distribution (min/p50/max),
 - small-file share (< ``small_bytes``, default 32 MB) by count AND by
   bytes — the count share drives scheduler pain, the byte share says
-  whether compaction (A7's sorted-write path) is worth the rewrite,
+  whether compaction (A22, `plans/compaction.py`) is worth the rewrite,
 - rows per file (footer metadata row counts) — tiny row groups also
   break predicate-pushdown effectiveness,
 - top-level partition skew: max/median bytes per first-level

@@ -98,43 +98,6 @@ def write_sorted(
     writer.parquet(path)
 
 
-def compact(
-    spark,
-    path: str,
-    target_file_mb: int = 128,
-    sort_by: tuple[str, ...] = (),
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ~target_file_mb files (the maintenance job every long-lived ingest
-    directory needs — streaming sinks and incremental backfills strew
-    small files, and at 100 TB file-open overhead + lost row-group
-    locality dominate scan time).  Returns the new file count.
-
-    Sizing reads the directory footprint from the filesystem, not a
-    count() pass.  Writes to a sibling temp dir then swaps, so a crash
-    mid-compact never leaves the directory half-rewritten."""
-    import math
-    import os
-    import shutil
-
-    total_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    out = df.repartition(n_files)
-    if sort_by:
-        out = out.sortWithinPartitions(*sort_by)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return n_files
-
-
 def streaming_parquet_sink(
     df: DataFrame,
     path: str,

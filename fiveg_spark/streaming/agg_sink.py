@@ -155,17 +155,3 @@ def foreach_batch_agg(
         )
 
     return apply_batch
-
-
-def attach_agg_sink(
-    rows: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    run_id: str,
-):
-    """Wire a row stream to the aggregate store."""
-    return (
-        rows.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(foreach_batch_agg(store_path, run_id))
-    )

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fiveg_spark.operators.sketches import BLOOM_K, BLOOM_M, bloom_bucket_expr
-from fiveg_spark.streaming.store_guard import is_replay
+from fiveg_spark.streaming.store_guard import partial_sink, rewrite
 
 
 def _bits_frame(df: DataFrame) -> DataFrame:
@@ -55,27 +55,7 @@ def _bits_frame(df: DataFrame) -> DataFrame:
 def foreach_batch_bloom(path: str) -> Callable[[DataFrame, int], None]:
     """Build a ``foreachBatch`` appending each micro-batch's distinct
     per-type Bloom bits."""
-
-    def bloom_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if is_replay(spark, path, batch_id):
-            return  # replayed batch: already appended
-        _bits_frame(batch_df).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(path)
-
-    return bloom_append
-
-
-def attach_bloom_sink(df: DataFrame, path: str, checkpoint: str):
-    """Wire the Bloom-maintenance sink onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(foreach_batch_bloom(path))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return partial_sink(path, _bits_frame)
 
 
 def read_bits(spark: SparkSession, path: str) -> DataFrame:
@@ -134,14 +114,12 @@ def compact(spark: SparkSession, path: str) -> None:
     high-water batch_id for the replay guard."""
     raw = spark.read.parquet(path)
     top = raw.agg(F.max("batch_id")).head()[0]
-    merged = (
+    rewrite(
+        path,
         raw.select("event_type", "bit")
         .distinct()
-        .withColumn("batch_id", F.lit(top).cast("long"))
+        .withColumn("batch_id", F.lit(top).cast("long")),
     )
-    # <= |types| * m rows: localCheckpoint breaks lineage to the files
-    # about to be overwritten
-    merged.localCheckpoint().write.mode("overwrite").parquet(path)
 
 
 def cross_check_batch_sketch(spark: SparkSession, path: str, events_view: str = "events") -> bool:

@@ -54,20 +54,3 @@ def foreach_batch_cdc(
         )
 
     return apply_batch
-
-
-def attach_cdc_sink(
-    changes: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    key: str,
-    n_buckets: int | None = None,
-):
-    """Wire a changelog stream to the bucketed store.  Append mode: the
-    stream is a pass-through of change records; all merge semantics
-    live in the store apply."""
-    return (
-        changes.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(foreach_batch_cdc(store_path, key, n_buckets))
-    )

@@ -38,7 +38,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fiveg_spark.streaming.store_guard import has_parquet as _has_parquet
+from fiveg_spark.streaming.store_guard import has_parquet, rewrite
 
 K_SLACK = 0.5  # reference-sigma slack per step (detects >~1-sigma shifts)
 H_DECISION = 4.0  # decision interval
@@ -60,7 +60,6 @@ def fit_reference_stats(
     return {
         r[key_col]: (float(r["mu"]), max(float(r["sd"]), 1e-9)) for r in rows
     }
-
 
 
 def foreach_batch_cusum(
@@ -86,7 +85,7 @@ def foreach_batch_cusum(
         # not store_guard.is_replay: the replay check reads the batch_id
         # high-water mark from the same aggregate that loads the state,
         # so the state store is read once per batch
-        if _has_parquet(state_dir):
+        if has_parquet(state_dir):
             latest = (
                 spark.read.parquet(state_dir)
                 .groupBy("key")
@@ -138,24 +137,6 @@ def foreach_batch_cusum(
     return step
 
 
-def attach_cusum_monitor(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    reference: dict[str, tuple[float, float]],
-    key_col: str,
-    value_col: str,
-):
-    """Wire the CUSUM monitor onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(
-            foreach_batch_cusum(path, reference, key_col, value_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-
-
 def read_alarms(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(f"{path}/metrics").filter(F.col("alarm"))
 
@@ -176,6 +157,4 @@ def compact_state(spark: SparkSession, path: str) -> None:
             F.max("batch_id").alias("batch_id"),
         )
     )
-    # |keys| rows: localCheckpoint breaks lineage to the files about
-    # to be overwritten
-    current.localCheckpoint().write.mode("overwrite").parquet(state_dir)
+    rewrite(state_dir, current)

@@ -30,12 +30,13 @@ batch-sized, not store-sized.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from fiveg_spark.streaming.store_guard import has_parquet
 
 
 def foreach_batch_dedup(path: str) -> Callable[[DataFrame, int], None]:
@@ -53,22 +54,9 @@ def foreach_batch_dedup(path: str) -> Callable[[DataFrame, int], None]:
             .filter(F.col("_rk") == 1)
             .drop("_rk")
         )
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(path)
-            for f in fs
-        ):
+        if has_parquet(path):
             seen = spark.read.parquet(path).select("h")
             firsts = firsts.join(seen, "h", "left_anti")
         firsts.write.mode("append").parquet(path)
 
     return dedup_append
-
-
-def attach_dedup_sink(df: DataFrame, path: str, checkpoint: str):
-    """Wire the dedup sink onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(foreach_batch_dedup(path))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )

@@ -10,7 +10,7 @@ Design:
   shares — a tiny plain-Python object that BROADCASTS into every batch
   (no stream-stream join, no state store: drift state is the frozen
   reference, not streaming state);
-- `attach_psi_monitor` wires a foreachBatch that bins the batch on the
+- `foreach_batch_psi` builds the foreachBatch that bins the batch on the
   reference edges (clamped to edge bins outside the range, the D27
   rule), floors shares at 1e-4, and appends one (batch_id, key, psi,
   n_rows, drifted) row per key to the parquet sink;
@@ -155,21 +155,3 @@ def foreach_batch_psi(
         ).write.mode("append").parquet(path)
 
     return score
-
-
-def attach_psi_monitor(
-    df: DataFrame,
-    ref: dict[str, dict],
-    path: str,
-    checkpoint: str,
-    key_col: str,
-    value_col: str,
-):
-    """Wire the monitor onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(
-            foreach_batch_psi(ref, path, key_col, value_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )

@@ -43,29 +43,18 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from fiveg_spark.streaming.store_guard import is_replay
 from pyspark.sql.window import Window
 
+from fiveg_spark.streaming.store_guard import partial_sink, rewrite
+
 HH_M = 16  # per-batch candidates kept per event_type
-
-_STORE_SCHEMA = (
-    "event_type STRING, user_id BIGINT, cnt BIGINT, max_dropped BIGINT,"
-    " kind STRING, batch_id BIGINT"
-)
-
 
 
 def foreach_batch_heavy(path: str, m: int = HH_M) -> Callable[[DataFrame, int], None]:
     """Build a ``foreachBatch`` appending per-(event_type) truncated
     heavy-hitter partials for each micro-batch."""
 
-    def heavy_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if is_replay(spark, path, batch_id):
-            return  # replayed batch: already appended
+    def heavy_partial(batch_df: DataFrame) -> DataFrame:
         counts = batch_df.groupBy("event_type", "user_id").agg(
             F.count("*").alias("cnt")
         )
@@ -100,11 +89,9 @@ def foreach_batch_heavy(path: str, m: int = HH_M) -> Callable[[DataFrame, int], 
                 F.lit("meta").alias("kind"),
             )
         )
-        kept.unionByName(meta).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(path)
+        return kept.unionByName(meta)
 
-    return heavy_append
+    return partial_sink(path, heavy_partial)
 
 
 def read_heavy_hitters(
@@ -213,19 +200,4 @@ def compact(
         F.lit("meta").alias("kind"),
         F.lit(wm).cast("long").alias("batch_id"),
     )
-    out = new_cand.unionByName(new_meta)
-    staged = [r for r in out.collect()]  # tiny summary: |types|·(m+1) rows
-    spark.createDataFrame(staged, _STORE_SCHEMA).write.mode("overwrite").parquet(
-        path
-    )
-
-
-def attach_heavy_sink(
-    df: DataFrame, path: str, checkpoint: str, m: int = HH_M
-):
-    """Wire the heavy-hitters sink onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(foreach_batch_heavy(path, m))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    rewrite(path, new_cand.unionByName(new_meta))

@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fiveg_spark.streaming.store_guard import is_replay
+from fiveg_spark.streaming.store_guard import partial_sink, rewrite
 
 _POSTING_SCHEMA = "vec_id long, label int, list_id int, cos double"
 
@@ -78,34 +78,17 @@ def foreach_batch_index(
     persisted centroids (loaded once, broadcast once)."""
     state: dict = {}
 
-    def index_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if is_replay(spark, path, batch_id):
-            return  # replayed batch: already appended
+    def postings(batch_df: DataFrame) -> DataFrame:
         if "bc" not in state:
             from fiveg_spark.operators.ann_ivf import load_centroids
 
+            spark = batch_df.sparkSession
             state["bc"] = spark.sparkContext.broadcast(
                 load_centroids(spark, centroids_path)
             )
-        _assign_with_cos(batch_df, state["bc"]).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(path)
+        return _assign_with_cos(batch_df, state["bc"])
 
-    return index_append
-
-
-def attach_index_sink(
-    df: DataFrame, path: str, centroids_path: str, checkpoint: str
-):
-    """Wire the index-maintenance sink onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(foreach_batch_index(path, centroids_path))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return partial_sink(path, postings)
 
 
 def read_postings(spark: SparkSession, path: str) -> DataFrame:
@@ -149,5 +132,4 @@ def compact(spark: SparkSession, path: str) -> None:
     """Collapse superseded/duplicate postings to the current row per
     vec_id, preserving the high-water batch_id per row (the global max
     survives with it)."""
-    current = read_postings(spark, path)
-    current.localCheckpoint().write.mode("overwrite").parquet(path)
+    rewrite(path, read_postings(spark, path))

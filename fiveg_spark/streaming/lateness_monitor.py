@@ -41,15 +41,11 @@ measures, continuously, what the delay should be.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fiveg_spark.operators.lateness import WATERMARK_LADDER
-from fiveg_spark.streaming.store_guard import has_parquet
+from fiveg_spark.streaming.store_guard import has_parquet, rewrite
 
 LATE_TARGET = 0.01  # recommended_watermark: pooled late share <= this
 
@@ -177,17 +173,6 @@ def foreach_batch_lateness(path: str, ts_col: str = "ts"):
     return score
 
 
-def attach_lateness_monitor(
-    df: DataFrame, path: str, checkpoint: str, ts_col: str = "ts"
-):
-    """Wire the monitor onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(foreach_batch_lateness(path, ts_col))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-
-
 def lateness_summary(spark: SparkSession, path: str) -> DataFrame:
     """Pooled (row-weighted) late share per candidate watermark, from
     store rows alone."""
@@ -235,11 +220,9 @@ def compact(spark: SparkSession, path: str) -> None:
     upper bound errs on the safe side for a watermark-safety readout
     (documented in the module header).
 
-    The rewrite is ATOMIC (the A22 staged-install recipe): the summary
-    lands in a staging directory first, then swaps in via os.replace
-    with restore-on-failure — a plain mode('overwrite') would delete
-    the store before writing, and a crash mid-compact would lose the
-    high-water batch_id the replay guard depends on."""
+    The rewrite goes through ``store_guard.rewrite``: the summary lands
+    in a sibling directory and swaps in, so a failed compact keeps the
+    store and the high-water batch_id the replay guard depends on."""
     store = _read_store(spark, path)
     if store is None:
         return
@@ -250,31 +233,15 @@ def compact(spark: SparkSession, path: str) -> None:
         ).alias(f"late_share_{w}s")
         for w in WATERMARK_LADDER
     ]
-    summary = store.agg(
-        F.max("batch_id").alias("batch_id"),
-        F.sum("n_rows").alias("n_rows"),
-        F.min("min_es").alias("min_es"),
-        F.max("max_es").alias("max_es"),
-        F.max("frontier_es").alias("frontier_es"),
-        *lates,
-        F.max("p95_behind_s").alias("p95_behind_s"),
-    ).select(*[f.name for f in spark.createDataFrame([], _store_schema()).schema])
-    pdf = summary.toPandas()
-    staging = f"{path}.compact-{uuid.uuid4().hex[:8]}"
-    try:
-        spark.createDataFrame(pdf, _store_schema()).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        old = f"{path}.pre-compact-{uuid.uuid4().hex[:8]}"
-        os.replace(path, old)
-        try:
-            os.replace(staging, path)
-        except BaseException:
-            os.replace(old, path)  # restore — store is intact again
-            raise
-        shutil.rmtree(old)
-    except BaseException:
-        # the store is known to be in place at `path` here: either it
-        # was never renamed away, or the inner handler restored it
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
+    rewrite(
+        path,
+        store.agg(
+            F.max("batch_id").alias("batch_id"),
+            F.sum("n_rows").alias("n_rows"),
+            F.min("min_es").alias("min_es"),
+            F.max("max_es").alias("max_es"),
+            F.max("frontier_es").alias("frontier_es"),
+            *lates,
+            F.max("p95_behind_s").alias("p95_behind_s"),
+        ),
+    )

@@ -60,17 +60,3 @@ def foreach_batch_upsert(
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return merge
-
-
-def attach_upsert_sink(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_by: tuple[str, ...] = ("slice", "window_start"),
-):
-    """Wire an update-mode streaming aggregation to the upsert store."""
-    return (
-        df.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(foreach_batch_upsert(path, partition_by))
-    )

@@ -39,7 +39,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fiveg_spark.streaming.store_guard import is_replay
+from fiveg_spark.streaming.store_guard import partial_sink, rewrite
 
 DEFAULT_K = 100
 
@@ -58,32 +58,14 @@ def foreach_batch_reservoir(
 ) -> Callable[[DataFrame, int], None]:
     """Build a ``foreachBatch`` appending each micro-batch's per-type
     bottom-k sample candidates (hash-priority rows)."""
-
-    def reservoir_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if is_replay(spark, path, batch_id):
-            return  # replayed batch: already appended
-        candidates = _bottom_k(
+    return partial_sink(
+        path,
+        lambda batch_df: _bottom_k(
             batch_df.withColumn(
                 "priority", F.xxhash64(F.col("event_id").cast("string"))
             ),
             k,
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        candidates.write.mode("append").parquet(path)
-
-    return reservoir_append
-
-
-def attach_reservoir_sink(
-    df: DataFrame, path: str, checkpoint: str, k: int = DEFAULT_K
-):
-    """Wire the reservoir-sample sink onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(foreach_batch_reservoir(path, k))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ),
     )
 
 
@@ -108,12 +90,12 @@ def compact(spark: SparkSession, path: str, k: int = DEFAULT_K) -> None:
     contributed no sample row."""
     raw = spark.read.parquet(path)
     top = raw.agg(F.max("batch_id")).head()[0]
-    sample = read_sample(spark, path, k).withColumn(
-        "batch_id", F.lit(top).cast("long")
+    rewrite(
+        path,
+        read_sample(spark, path, k).withColumn(
+            "batch_id", F.lit(top).cast("long")
+        ),
     )
-    # |types| x k rows: localCheckpoint breaks lineage to the files
-    # about to be overwritten
-    sample.localCheckpoint().write.mode("overwrite").parquet(path)
 
 
 def estimate_share(

@@ -34,41 +34,20 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fiveg_spark.streaming.store_guard import is_replay
-
+from fiveg_spark.streaming.store_guard import partial_sink, rewrite
 
 
 def foreach_batch_sketch(path: str) -> Callable[[DataFrame, int], None]:
     """Build a ``foreachBatch`` appending per-(event_type, day) partial
     HLL sketches of ``user_id`` for each micro-batch."""
-
-    def sketch_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if is_replay(spark, path, batch_id):
-            return  # replayed batch: already appended
-        partial = (
-            batch_df.groupBy(
-                "event_type", F.date_trunc("day", "ts").alias("day")
-            )
-            .agg(
-                F.hll_sketch_agg("user_id").alias("sk"),
-                F.count("*").alias("n"),
-            )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        )
-        partial.write.mode("append").parquet(path)
-
-    return sketch_append
-
-
-def attach_sketch_sink(df: DataFrame, path: str, checkpoint: str):
-    """Wire the sketch-maintenance sink onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(foreach_batch_sketch(path))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return partial_sink(
+        path,
+        lambda batch_df: batch_df.groupBy(
+            "event_type", F.date_trunc("day", "ts").alias("day")
+        ).agg(
+            F.hll_sketch_agg("user_id").alias("sk"),
+            F.count("*").alias("n"),
+        ),
     )
 
 
@@ -103,9 +82,7 @@ def compact(spark: SparkSession, path: str) -> None:
         )
         .withColumnRenamed("n_events", "n")
     )
-    # small frame (|keys| rows): localCheckpoint breaks the lineage to
-    # the files about to be overwritten
-    merged.localCheckpoint().write.mode("overwrite").parquet(path)
+    rewrite(path, merged)
 
 
 def estimate_type_actives(spark: SparkSession, path: str) -> DataFrame:

@@ -42,9 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fiveg_spark.streaming.store_guard import is_replay
-
 from fiveg_spark.operators.tdigest import tdigest_compress, tdigest_quantile
+from fiveg_spark.streaming.store_guard import partial_sink, rewrite
 
 _PARTIAL_SCHEMA = (
     "event_type string, day timestamp, centroid_id int,"
@@ -84,34 +83,15 @@ def _compress_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 def foreach_batch_tdigest(path: str) -> Callable[[DataFrame, int], None]:
     """Build a ``foreachBatch`` appending per-(event_type, day) partial
     t-digest centroids of ``value`` for each micro-batch."""
-
-    def tdigest_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if is_replay(spark, path, batch_id):
-            return  # replayed batch: already appended
-        partial = (
-            batch_df.select(
-                "event_type",
-                F.date_trunc("day", "ts").alias("day"),
-                F.col("value").cast("double").alias("value"),
-            )
-            .groupBy("event_type", "day")
-            .applyInPandas(_compress_batch, schema=_PARTIAL_SCHEMA)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
+    return partial_sink(
+        path,
+        lambda batch_df: batch_df.select(
+            "event_type",
+            F.date_trunc("day", "ts").alias("day"),
+            F.col("value").cast("double").alias("value"),
         )
-        partial.write.mode("append").parquet(path)
-
-    return tdigest_append
-
-
-def attach_tdigest_sink(df: DataFrame, path: str, checkpoint: str):
-    """Wire the t-digest maintenance sink onto a streaming DataFrame."""
-    return (
-        df.writeStream.foreachBatch(foreach_batch_tdigest(path))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        .groupBy("event_type", "day")
+        .applyInPandas(_compress_batch, schema=_PARTIAL_SCHEMA),
     )
 
 
@@ -190,9 +170,7 @@ def compact(spark: SparkSession, path: str) -> None:
     merged = _deduped(spark.read.parquet(path)).groupBy(
         "event_type", "day"
     ).applyInPandas(_compact_key, schema=_PARTIAL_SCHEMA + ", batch_id long")
-    # |keys| x O(delta) rows: localCheckpoint breaks lineage to the
-    # files about to be overwritten
-    merged.localCheckpoint().write.mode("overwrite").parquet(path)
+    rewrite(path, merged)
 
 
 def _digest_cdf(means, masses, x: float) -> float:

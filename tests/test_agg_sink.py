@@ -84,9 +84,12 @@ def test_streaming_tail_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = agg_sink.attach_agg_sink(stream, path, ckpt, "rt").trigger(
-        availableNow=True
-    ).start()
+    q = (
+        stream.writeStream.foreachBatch(agg_sink.foreach_batch_agg(path, "rt"))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
     got = {
         r["status"]: (r["n_rows"], r["sum_price"])

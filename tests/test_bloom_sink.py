@@ -9,7 +9,6 @@ from __future__ import annotations
 import datetime as dt
 
 from fiveg_spark.streaming.bloom_sink import (
-    attach_bloom_sink,
     check_membership,
     compact,
     cross_check_batch_sketch,
@@ -113,9 +112,12 @@ def test_bloom_sink_streaming_end_to_end(spark, tmp_path):
     ).parquet(src)
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = attach_bloom_sink(stream, path, ckpt).trigger(
-        availableNow=True
-    ).start()
+    q = (
+        stream.writeStream.foreachBatch(foreach_batch_bloom(path))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
 
     got = {r["probe_id"]: r["maybe_present"]
@@ -127,9 +129,9 @@ def test_bloom_sink_streaming_end_to_end(spark, tmp_path):
     # restart on the same checkpoint: no new data -> store unchanged
     n = spark.read.parquet(path).count()
     q2 = (
-        attach_bloom_sink(
-            spark.readStream.schema(SCHEMA).parquet(src), path, ckpt
-        )
+        spark.readStream.schema(SCHEMA).parquet(src)
+        .writeStream.foreachBatch(foreach_batch_bloom(path))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )

@@ -291,15 +291,19 @@ _CHANGE_SCHEMA = (
 
 
 def _run_cdc_stream(spark, src, store, ckpt):
-    from fiveg_spark.streaming.cdc_sink import attach_cdc_sink
+    from fiveg_spark.streaming.cdc_sink import foreach_batch_cdc
 
     changes = (
         spark.readStream.schema(_CHANGE_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = attach_cdc_sink(changes, store, ckpt, "k").trigger(
-        availableNow=True).start()
+    q = (
+        changes.writeStream.foreachBatch(foreach_batch_cdc(store, "k"))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(180)
 
 

@@ -5,7 +5,6 @@ is a no-op, and the wired availableNow e2e runs."""
 from __future__ import annotations
 
 from fiveg_spark.streaming.cusum_monitor import (
-    attach_cusum_monitor,
     fit_reference_stats,
     foreach_batch_cusum,
     read_alarms,
@@ -79,7 +78,10 @@ def test_cusum_streaming_end_to_end(spark, tmp_path):
     _frame(spark, "a", [12.0] * 8).write.mode("append").parquet(src)
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     q = (
-        attach_cusum_monitor(stream, path, ckpt, ref, "key", "v")
+        stream.writeStream.foreachBatch(
+            foreach_batch_cusum(path, ref, "key", "v")
+        )
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )

@@ -4,7 +4,7 @@ availableNow end-to-end run."""
 
 from __future__ import annotations
 
-from fiveg_spark.streaming.dedup_sink import attach_dedup_sink, foreach_batch_dedup
+from fiveg_spark.streaming.dedup_sink import foreach_batch_dedup
 
 SCHEMA = "doc_id BIGINT, text STRING, source STRING"
 
@@ -78,6 +78,11 @@ def test_dedup_sink_streaming_end_to_end(spark, tmp_path):
     path = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = attach_dedup_sink(stream, path, ckpt).trigger(availableNow=True).start()
+    q = (
+        stream.writeStream.foreachBatch(foreach_batch_dedup(path))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
     assert _stored(spark, path) == {(0, "alpha beta"), (2, "new doc")}

@@ -5,7 +5,6 @@ availableNow end-to-end run."""
 from __future__ import annotations
 
 from fiveg_spark.streaming.drift_monitor import (
-    attach_psi_monitor,
     fit_reference,
     foreach_batch_psi,
 )
@@ -62,7 +61,10 @@ def test_psi_monitor_streaming_end_to_end(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     q = (
-        attach_psi_monitor(stream, ref, path, ckpt, "k", "v")
+        stream.writeStream.foreachBatch(
+            foreach_batch_psi(ref, path, "k", "v")
+        )
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )

@@ -8,7 +8,6 @@ import datetime as dt
 from collections import Counter
 
 from fiveg_spark.streaming.heavy_sink import (
-    attach_heavy_sink,
     compact,
     foreach_batch_heavy,
     read_heavy_hitters,
@@ -105,9 +104,12 @@ def test_heavy_sink_streaming_end_to_end(spark, tmp_path):
     _batch(spark, _zipfish(1), eid0=500).write.mode("append").parquet(src)
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = attach_heavy_sink(stream, path, ckpt, m=4).trigger(
-        availableNow=True
-    ).start()
+    q = (
+        stream.writeStream.foreachBatch(foreach_batch_heavy(path, m=4))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
 
     got = {r["user_id"]: r.asDict()
@@ -115,9 +117,13 @@ def test_heavy_sink_streaming_end_to_end(spark, tmp_path):
     assert got[0]["rnk"] == 1 and got[0]["est_count"] == 80
 
     # restart with the same checkpoint: no new data -> store unchanged
-    q2 = attach_heavy_sink(
-        spark.readStream.schema(SCHEMA).parquet(src), path, ckpt, m=4
-    ).trigger(availableNow=True).start()
+    q2 = (
+        spark.readStream.schema(SCHEMA).parquet(src)
+        .writeStream.foreachBatch(foreach_batch_heavy(path, m=4))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q2.awaitTermination(120)
     again = {r["user_id"]: r.asDict()
              for r in read_heavy_hitters(spark, path, k=3).collect()}

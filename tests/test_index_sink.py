@@ -9,7 +9,6 @@ import numpy as np
 
 from fiveg_spark.operators.ann_ivf import save_centroids
 from fiveg_spark.streaming.index_sink import (
-    attach_index_sink,
     compact,
     foreach_batch_index,
     index_health,
@@ -113,9 +112,12 @@ def test_index_sink_streaming_end_to_end(spark, tmp_path):
     ).parquet(src)
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = attach_index_sink(stream, path, cpath, ckpt).trigger(
-        availableNow=True
-    ).start()
+    q = (
+        stream.writeStream.foreachBatch(foreach_batch_index(path, cpath))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
 
     got = read_postings(spark, path)
@@ -124,9 +126,9 @@ def test_index_sink_streaming_end_to_end(spark, tmp_path):
 
     # restart on the same checkpoint: no new data -> postings unchanged
     q2 = (
-        attach_index_sink(
-            spark.readStream.schema(SCHEMA).parquet(src), path, cpath, ckpt
-        )
+        spark.readStream.schema(SCHEMA).parquet(src)
+        .writeStream.foreachBatch(foreach_batch_index(path, cpath))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )

@@ -12,7 +12,6 @@ import pytest
 
 from fiveg_spark.operators.lateness import WATERMARK_LADDER
 from fiveg_spark.streaming.lateness_monitor import (
-    attach_lateness_monitor,
     compact,
     foreach_batch_lateness,
     lateness_summary,
@@ -111,7 +110,8 @@ def test_available_now_end_to_end(spark, tmp_path):
         .parquet(f"{src}/m*")
     )
     q = (
-        attach_lateness_monitor(stream, path, ckpt)
+        stream.writeStream.foreachBatch(foreach_batch_lateness(path))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )

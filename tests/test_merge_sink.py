@@ -7,7 +7,7 @@ exercises the wired writeStream path end-to-end.
 
 from __future__ import annotations
 
-from fiveg_spark.streaming.merge_sink import attach_upsert_sink, foreach_batch_upsert
+from fiveg_spark.streaming.merge_sink import foreach_batch_upsert
 
 SCHEMA = "slice STRING, window_start TIMESTAMP, n BIGINT, bytes DOUBLE"
 
@@ -77,7 +77,12 @@ def test_upsert_streaming_end_to_end(spark, tmp_path):
         .withColumnRenamed("sum(n)", "n")
         .withColumnRenamed("sum(bytes)", "bytes")
     )
-    q = attach_upsert_sink(stream, path, ckpt).start()
+    q = (
+        stream.writeStream.outputMode("update")
+        .foreachBatch(foreach_batch_upsert(path))
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
     try:
         q.processAllAvailable()
     finally:

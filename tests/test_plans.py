@@ -243,34 +243,6 @@ def test_materialized_backed_oracle_merges_with_chains(spark, duck):
     assert [r["s"] for r in q2.run(spark, "unused").collect()] == [14]
 
 
-def test_deferred_queries_stay_out_of_certification_window():
-    """Queries registered mid-round (deferred=True) must sort BEHIND the
-    frozen never-certified set: the driver samples the first 50 entries
-    of queries(), and a mid-round registration displacing one of those
-    names would starve it of its certification slot for a whole round."""
-    import __spark_entry__ as contract
-
-    deferred = {
-        q.name
-        for mod in contract._MODULES
-        for q in mod.QUERIES
-        if getattr(q, "deferred", False)
-    }
-    if not deferred:
-        return  # nothing deferred this round
-    names = list(contract.queries())
-    oracles = contract.oracle_sql()
-    frozen = [
-        n
-        for n in names
-        if n in oracles and n not in contract._DRIVER_CERTIFIED and n not in deferred
-    ]
-    window = set(names[: min(50, len(frozen))])
-    assert not (window & deferred), (
-        f"deferred queries displaced frozen window names: {window & deferred}"
-    )
-
-
 def test_corr_safe_matches_numpy_and_handles_degenerate(spark):
     import numpy as np
 

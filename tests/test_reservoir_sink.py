@@ -8,7 +8,6 @@ from __future__ import annotations
 import datetime as dt
 
 from fiveg_spark.streaming.reservoir_sink import (
-    attach_reservoir_sink,
     compact,
     estimate_share,
     foreach_batch_reservoir,
@@ -131,9 +130,12 @@ def test_reservoir_sink_streaming_end_to_end(spark, tmp_path):
     _rows(spark, range(600, 1200), typ="view").write.mode("append").parquet(src)
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = attach_reservoir_sink(stream, path, ckpt, k).trigger(
-        availableNow=True
-    ).start()
+    q = (
+        stream.writeStream.foreachBatch(foreach_batch_reservoir(path, k))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
 
     from pyspark.sql import functions as F
@@ -150,9 +152,9 @@ def test_reservoir_sink_streaming_end_to_end(spark, tmp_path):
     # restart on the same checkpoint with no new data: store unchanged
     before = _sample_ids(spark, path, k)
     q2 = (
-        attach_reservoir_sink(
-            spark.readStream.schema(SCHEMA).parquet(src), path, ckpt, k
-        )
+        spark.readStream.schema(SCHEMA).parquet(src)
+        .writeStream.foreachBatch(foreach_batch_reservoir(path, k))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )

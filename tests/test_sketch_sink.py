@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 from fiveg_spark.streaming.sketch_sink import (
-    attach_sketch_sink,
     compact,
     estimate_type_actives,
     foreach_batch_sketch,
@@ -95,7 +94,12 @@ def test_sketch_sink_streaming_end_to_end(spark, tmp_path):
     ).parquet(src)
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = attach_sketch_sink(stream, path, ckpt).trigger(availableNow=True).start()
+    q = (
+        stream.writeStream.foreachBatch(foreach_batch_sketch(path))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
 
     merged = {
@@ -108,7 +112,9 @@ def test_sketch_sink_streaming_end_to_end(spark, tmp_path):
 
     # restart with the same checkpoint: no new data -> store unchanged
     q2 = (
-        attach_sketch_sink(spark.readStream.schema(SCHEMA).parquet(src), path, ckpt)
+        spark.readStream.schema(SCHEMA).parquet(src)
+        .writeStream.foreachBatch(foreach_batch_sketch(path))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )

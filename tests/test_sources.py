@@ -237,22 +237,6 @@ def test_pcap_to_kpi_end_to_end(spark, tmp_path):
         assert f["reliability"] == f["complexity"] == 0.0
 
 
-def test_compact_shrinks_file_count(spark, tmp_path):
-    from fiveg_spark.sources.sinks import compact
-
-    src = str(tmp_path / "fragmented")
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    n_rows = events.count()
-    events.repartition(50).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/*.parquet")) == 50
-    compact(spark, src, target_file_mb=64)
-    files_after = glob.glob(f"{src}/*.parquet")
-    assert len(files_after) <= 2
-    assert spark.read.parquet(src).count() == n_rows
-
-
 def test_sorted_write_gives_skippable_row_groups(spark, tmp_path):
     import glob
 

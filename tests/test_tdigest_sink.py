@@ -10,7 +10,6 @@ import datetime as dt
 import numpy as np
 
 from fiveg_spark.streaming.tdigest_sink import (
-    attach_tdigest_sink,
     compact,
     foreach_batch_tdigest,
     read_daily_quantiles,
@@ -126,9 +125,12 @@ def test_tdigest_sink_streaming_end_to_end(spark, tmp_path):
     _batch(spark, 1, "lat", v1, eid0=400).write.mode("append").parquet(src)
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = attach_tdigest_sink(stream, path, ckpt).trigger(
-        availableNow=True
-    ).start()
+    q = (
+        stream.writeStream.foreachBatch(foreach_batch_tdigest(path))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
 
     got = read_daily_quantiles(spark, path).collect()[0].asDict()
@@ -137,9 +139,9 @@ def test_tdigest_sink_streaming_end_to_end(spark, tmp_path):
 
     # restart on the same checkpoint with no new data: store unchanged
     q2 = (
-        attach_tdigest_sink(
-            spark.readStream.schema(SCHEMA).parquet(src), path, ckpt
-        )
+        spark.readStream.schema(SCHEMA).parquet(src)
+        .writeStream.foreachBatch(foreach_batch_tdigest(path))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
