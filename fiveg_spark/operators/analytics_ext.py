@@ -15,7 +15,7 @@ window/join plans on ~#days × #types rows).
 from __future__ import annotations
 
 from fiveg_spark.operators.kpi import flows_cte
-from fiveg_spark.plans.registry import NUDGE, Query, cnt, dbl, epoch, materialized_backed, pct, sql_backed
+from fiveg_spark.plans.registry import NUDGE, cnt, dbl, epoch, materialized_backed, pct, sql_backed
 
 # Day-level value series per event_type; measure rounded so every
 # downstream window sees identical inputs in both engines.

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from fiveg_spark.plans.registry import (
     NUDGE,
-    Query,
     arr_len,
     cnt,
     dbl,

@@ -12,7 +12,7 @@ the shared round-with-nudge discipline.
 
 from __future__ import annotations
 
-from fiveg_spark.operators.text import _bm25_ranked_ctes, _tok, _tf_frame_sql
+from fiveg_spark.operators.text import _bm25_ranked_ctes, _tf_frame_sql
 from fiveg_spark.plans.registry import (
     NUDGE,
     Query,

@@ -9,7 +9,7 @@ top-k.  At 100 TB: region/nation/customer/supplier are broadcast-side
 
 from __future__ import annotations
 
-from fiveg_spark.plans.registry import Query, cnt, dbl, sql_backed
+from fiveg_spark.plans.registry import cnt, dbl, sql_backed
 
 
 def _q1_sql(d: str) -> str:

@@ -13,6 +13,9 @@ import time
 
 from pyspark.sql import SparkSession
 
+# the directory holding the fiveg_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_shuffle_partitions() -> int:
     """The session's shuffle-partition sizing, shared with operators that
@@ -38,7 +41,20 @@ def get_spark(
       columnar-batched.
     - 128 MiB file split target: keeps scan tasks balanced on wide
       parquet at cluster scale.
+    - Python workers fork from ``fiveg_spark.pyworker``, a daemon that
+      stops each task's ``importlib.invalidate_caches()`` from
+      re-reading every zip archive on the worker's path (pyspark.zip,
+      py4j, the spark-core jar) once per cached importer, about 0.13 s
+      per task.  The patch applies on CPython < 3.13 only (3.13 made that
+      call lazy) and never in this driver process.  The workers'
+      ``PYTHONPATH`` gets this package's root, so the daemon starts
+      whatever directory the driver runs in.
     """
+    # imported here, not at module level: the daemon starts as
+    # ``python -m fiveg_spark.pyworker``, and runpy warns when importing
+    # the package has already imported the module it is about to run
+    from fiveg_spark import pyworker
+
     # pin the process tz BEFORE the JVM starts: PySpark's collect()
     # renders timestamp instants in the Python process's OS timezone
     # (session tz notwithstanding), so a non-UTC host would shift every
@@ -60,6 +76,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", pyworker.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")

@@ -1,8 +1,10 @@
 """PCAP as a first-class Spark data source (SURVEY §2 A31): the Spark
-4 Python DataSource API wrapped around A2's pure-Python decoder, so
-capture files read as ``spark.read.format("pcap").load(dir)`` — the one
-capture reader, batch and streaming — and the source itself
-participates in Catalyst's filter pushdown.
+4 Python DataSource API wrapped around A2's decoder, so capture files
+read as ``spark.read.format("pcap").load(dir)`` — the one capture
+reader, batch and streaming — and the source itself participates in
+Catalyst's filter pushdown.  ``read`` yields the decoder's
+``pyarrow.RecordBatch``es, which Spark takes as they are (no per-row
+Python→Arrow conversion).
 
 Two pushdowns, each honest about what it saves:
 
@@ -11,8 +13,8 @@ Two pushdowns, each honest about what it saves:
   layout convention, PcapKpiExtractor.scala's directory scheme), so
   this is partition pruning in the Hive sense: at 100 TB of captures
   the non-matching slices never leave the object store.
-- ``protocol = 'X'`` filters during the decode loop — rows are skipped
-  before Arrow serialization, saving the Python→JVM transfer (the
+- ``protocol = 'X'`` filters each decoded batch (an Arrow filter)
+  before it is handed to Spark, saving the Python→JVM transfer (the
   decode itself still walks the file; packet records are not
   splittable or indexed).
 
@@ -31,6 +33,8 @@ from __future__ import annotations
 import os
 from typing import Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -44,9 +48,6 @@ from fiveg_spark.sources.pcap import (
     decode_pcap_bytes,
     infer_slice,
 )
-
-# PACKET_SCHEMA column position the protocol pushdown acts on
-_PROTOCOL_IDX = 6
 
 
 class PcapFilePartition(InputPartition):
@@ -115,16 +116,17 @@ class PcapReader(DataSourceReader):
             parts.append(PcapFilePartition(path, slice_type))
         return parts
 
-    def read(self, partition: PcapFilePartition) -> Iterator[tuple]:
+    def read(self, partition: PcapFilePartition) -> Iterator[pa.RecordBatch]:
         with open(partition.path, "rb") as fh:
             data = fh.read()
         proto = self._protocol_eq
-        for row in decode_pcap_bytes(
+        for batch in decode_pcap_bytes(
             data, partition.slice_type, os.path.basename(partition.path)
         ):
-            if proto is not None and row[_PROTOCOL_IDX] != proto:
-                continue
-            yield row
+            if proto is not None:
+                batch = batch.filter(pc.equal(batch.column("protocol"), proto))
+            if batch.num_rows:
+                yield batch
 
 
 class PcapNonMonotonicLanding(RuntimeError):
@@ -281,7 +283,7 @@ class PcapStreamReader(DataSourceStreamReader):
             )
         return out
 
-    def read(self, partition: PcapFilePartition) -> Iterator[tuple]:
+    def read(self, partition: PcapFilePartition) -> Iterator[pa.RecordBatch]:
         return self._batch.read(partition)
 
     def commit(self, end: dict) -> None:

@@ -6,8 +6,6 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import functions as F
-
 from fiveg_spark.streaming import agg_sink
 
 

@@ -4,7 +4,6 @@ these pin the formulas against independent references (pandas / numpy)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from fiveg_spark.operators.analytics_ext import QUERIES
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 from fiveg_spark.ml.huber import DELTA, ITERS, huber_fit, scalar_design

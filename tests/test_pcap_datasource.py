@@ -16,7 +16,7 @@ from fiveg_spark.sources.pcap_datasource import (
     PcapStreamReader,
     register_pcap_source,
 )
-from tests.test_sources import _ipv4_tcp_packet, _pcap_bytes
+from tests.test_sources import _ipv4_tcp_packet, _pcap_bytes, decoded_rows
 
 
 def _lay_out_captures(tmp_path):
@@ -30,7 +30,7 @@ def _lay_out_captures(tmp_path):
 
 
 def test_format_pcap_matches_decoder_rows(spark, tmp_path):
-    from fiveg_spark.sources.pcap import PACKET_SCHEMA, decode_pcap_bytes, infer_slice
+    from fiveg_spark.sources.pcap import PACKET_SCHEMA, infer_slice
 
     root = _lay_out_captures(tmp_path)
     register_pcap_source(spark)
@@ -39,7 +39,7 @@ def test_format_pcap_matches_decoder_rows(spark, tmp_path):
     expected = sorted(
         row
         for f in sorted(tmp_path.glob("*/*.pcap"))
-        for row in decode_pcap_bytes(f.read_bytes(), infer_slice(str(f)), f.name)
+        for row in decoded_rows(f.read_bytes(), infer_slice(str(f)), f.name)
     )
     assert sorted(map(tuple, via_source.collect())) == expected
     assert len(expected) == 3
@@ -73,8 +73,8 @@ def test_protocol_pushdown_and_unsupported_filters_return(spark, tmp_path):
         EqualTo(("protocol",), "UDP"), unsupported,
     ]))
     assert remaining == [unsupported]  # back to Spark for post-scan
-    # pushed protocol=UDP: the decode loop skips every TCP row
-    assert sum(1 for p in r.partitions() for _row in r.read(p)) == 0
+    # pushed protocol=UDP: the batch filter drops every TCP row
+    assert sum(b.num_rows for p in r.partitions() for b in r.read(p)) == 0
 
     register_pcap_source(spark)
     df = spark.read.format("pcap").load(root)

@@ -10,7 +10,6 @@ import struct
 
 import pytest
 
-from fiveg_spark.sources.pcap import decode_pcap_bytes
 from fiveg_spark.sources.pcap_datasource import register_pcap_source
 from fiveg_spark.sources.pcap_writer import (
     GLOBAL_HEADER,
@@ -18,6 +17,7 @@ from fiveg_spark.sources.pcap_writer import (
     TCP_CAP_LEN,
     encode_packet,
 )
+from tests.test_sources import decoded_rows
 
 _SCHEMA = (
     "slice_type STRING, timestamp_ms LONG, packet_len INT, protocol STRING,"
@@ -51,7 +51,7 @@ def test_encode_decode_identity_unit():
     reproduces every representable field, no Spark involved."""
     rec = encode_packet(1700000000123, 900, "TCP", "10.1.2.3",
                         "10.0.0.2", 1234, 80, 24, 5000, 123456789)
-    got = list(decode_pcap_bytes(GLOBAL_HEADER + rec, "eMBB", "f.pcap"))
+    got = decoded_rows(GLOBAL_HEADER + rec, "eMBB", "f.pcap")
     assert len(got) == 1
     (slice_type, _f, ts, ts_ms, pkt_len, cap_len, proto, sip, dip,
      sport, dport, _flow, ip_hlen, flags, win, seq) = got[0]
@@ -67,8 +67,8 @@ def test_non_tcp_stub_lengths():
         rec = encode_packet(1, 50, proto, "1.2.3.4", "5.6.7.8",
                             10, 20, 0, 0, 0)
         ((_s, _f, _ts, _ms, _pl, cap, p, _si, _di, sport, dport,
-          _fl, _ih, flags, win, seq),) = list(
-            decode_pcap_bytes(GLOBAL_HEADER + rec, "x", "f"))
+          _fl, _ih, flags, win, seq),) = decoded_rows(
+            GLOBAL_HEADER + rec, "x", "f")
         assert cap == STUB_CAP_LEN and p == proto
         assert (sport, dport) == (10, 20)
         assert (flags, win, seq) == (0, 0, 0)  # decoder defaults

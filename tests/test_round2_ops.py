@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
-
 from fiveg_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 

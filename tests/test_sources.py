@@ -6,17 +6,17 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from fiveg_spark.sources.kafka import (
-    PACKET_JSON_SCHEMA,
     kafka_batch_reader,
     kafka_stream_reader,
     parse_packet_json,
     to_kafka_records,
 )
-from fiveg_spark.sources.pcap import decode_pcap_bytes, infer_slice
+from fiveg_spark.sources.pcap import BATCH_ROWS, decode_pcap_bytes, infer_slice
 from fiveg_spark.sources.pcap_datasource import register_pcap_source
 from fiveg_spark.sources.tables import normalize_event_ts
 from fiveg_spark.sources.sinks import streaming_parquet_sink, write_partitioned
@@ -47,9 +47,18 @@ def _pcap_bytes(packets, ts0=1700000000, little=True) -> bytes:
     return out
 
 
+def decoded_rows(data: bytes, slice_type: str, file_name: str) -> list[tuple]:
+    """The decoder's batches as PACKET_SCHEMA-ordered row tuples."""
+    return [
+        tuple(row.values())
+        for batch in decode_pcap_bytes(data, slice_type, file_name)
+        for row in batch.to_pylist()
+    ]
+
+
 def test_decode_pcap_field_parity():
     pkt = _ipv4_tcp_packet()
-    rows = list(decode_pcap_bytes(_pcap_bytes([pkt]), "eMBB", "f.pcap"))
+    rows = decoded_rows(_pcap_bytes([pkt]), "eMBB", "f.pcap")
     assert len(rows) == 1
     r = dict(zip([f.name for f in __import__("fiveg_spark.sources.pcap", fromlist=["PACKET_SCHEMA"]).PACKET_SCHEMA.fields], rows[0]))
     assert r["protocol"] == "TCP"
@@ -65,11 +74,11 @@ def test_decode_pcap_field_parity():
 def test_decode_pcap_both_endianness_and_truncation():
     pkts = [_ipv4_tcp_packet(sport=i) for i in range(5)]
     for little in (True, False):
-        rows = list(decode_pcap_bytes(_pcap_bytes(pkts, little=little), "URLLC", "g.pcap"))
+        rows = decoded_rows(_pcap_bytes(pkts, little=little), "URLLC", "g.pcap")
         assert [r[9] for r in rows] == [0, 1, 2, 3, 4]  # src_port order kept
     # truncated tail: decoder stops cleanly
     blob = _pcap_bytes(pkts)[:-10]
-    rows = list(decode_pcap_bytes(blob, "URLLC", "g.pcap"))
+    rows = decoded_rows(blob, "URLLC", "g.pcap")
     assert len(rows) == 4
 
 
@@ -79,7 +88,113 @@ def test_decode_pcap_keeps_every_record_past_one_million():
     n = 1_000_001
     rec = struct.pack("<IIII", 1700000000, 0, 1, 1) + b"\x00"
     blob = _pcap_bytes([]) + rec * n
-    assert sum(1 for _ in decode_pcap_bytes(blob, "eMBB", "big.pcap")) == n
+    assert sum(b.num_rows for b in decode_pcap_bytes(blob, "eMBB", "big.pcap")) == n
+
+
+def test_decode_pcap_batches_are_bounded_and_keep_every_record():
+    # a capture past the batch bound streams out as several batches,
+    # in file order, none larger than the bound
+    n = 2 * BATCH_ROWS + 5
+    blob = _pcap_bytes([]) + b"".join(
+        struct.pack("<IIII", ts, 0, 1, 1) + b"\x00" for ts in range(n)
+    )
+    batches = list(decode_pcap_bytes(blob, "eMBB", "big.pcap"))
+    assert [b.num_rows for b in batches] == [BATCH_ROWS, BATCH_ROWS, 5]
+    ts_ms = [v for b in batches for v in b.column("timestamp_ms").to_pylist()]
+    assert ts_ms == [ts * 1000 for ts in range(n)]
+
+
+def test_decode_pcap_skips_oversized_orig_len():
+    # packet_len is a signed 32-bit column: a record whose orig_len does
+    # not fit is malformed and skipped like a bad cap_len, and its
+    # neighbours survive
+    pkt = _ipv4_tcp_packet()
+    blob = _pcap_bytes([])
+    for sport, orig_len in ((1, 2**31 - 1), (2, 2**31), (3, 2**32 - 1), (4, 60)):
+        p = _ipv4_tcp_packet(sport=sport)
+        blob += struct.pack("<IIII", 1700000000, 0, len(p), orig_len) + p
+    rows = decoded_rows(blob, "eMBB", "f.pcap")
+    assert [(r[9], r[4]) for r in rows] == [(1, 2**31 - 1), (4, 60)]
+    assert all(r[5] == len(pkt) for r in rows)
+
+
+def _reference_rows(data: bytes, slice_type: str, file_name: str) -> list[tuple]:
+    """Per-record loop decoder: the reference the batch decoder must
+    reproduce row for row (PcapKpiExtractor.scala:138-227)."""
+    if len(data) < 24:
+        return []
+    magic = struct.unpack(">I", data[:4])[0]
+    end = {0xD4C3B2A1: "<", 0x4D3CB2A1: "<", 0xA1B2C3D4: ">", 0xA1B23C4D: ">"}.get(magic)
+    if end is None:
+        return []
+    rows, off = [], 24
+    while off + 16 <= len(data):
+        ts_sec, ts_usec, cap_len, orig_len = struct.unpack_from(f"{end}IIII", data, off)
+        off += 16
+        if not (0 < cap_len < 65536) or orig_len >= 2**31 or off + cap_len > len(data):
+            off += cap_len
+            continue
+        pkt = data[off : off + cap_len]
+        off += cap_len
+        protocol, src_ip, dst_ip = "OTHER", "0.0.0.0", "0.0.0.0"
+        src_port = dst_port = ip_hlen = tcp_flags = win_size = seq = 0
+        ip_off = 0
+        if len(pkt) > 13 and ((pkt[12] << 8) | pkt[13]) in (0x0800, 0x86DD):
+            ip_off = 14
+        if len(pkt) > ip_off + 20 and (pkt[ip_off] >> 4) == 4:
+            ip_hlen = (pkt[ip_off] & 0x0F) * 4
+            protocol = {6: "TCP", 17: "UDP", 1: "ICMP"}.get(pkt[ip_off + 9], "OTHER")
+            src_ip = ".".join(str(b) for b in pkt[ip_off + 12 : ip_off + 16])
+            dst_ip = ".".join(str(b) for b in pkt[ip_off + 16 : ip_off + 20])
+            t_off = ip_off + ip_hlen
+            if len(pkt) > t_off + 4:
+                src_port = (pkt[t_off] << 8) | pkt[t_off + 1]
+                dst_port = (pkt[t_off + 2] << 8) | pkt[t_off + 3]
+                if protocol == "TCP" and len(pkt) > t_off + 20:
+                    seq = int.from_bytes(pkt[t_off + 4 : t_off + 8], "big")
+                    tcp_flags = pkt[t_off + 13]
+                    win_size = (pkt[t_off + 14] << 8) | pkt[t_off + 15]
+        rows.append((
+            slice_type, file_name, ts_sec + ts_usec / 1_000_000.0,
+            ts_sec * 1000 + ts_usec // 1000, orig_len, cap_len, protocol,
+            src_ip, dst_ip, src_port, dst_port,
+            f"{src_ip}_{dst_ip}_{src_port}_{dst_port}_{protocol}",
+            ip_hlen, tcp_flags, win_size, seq,
+        ))
+    return rows
+
+
+@pytest.mark.parametrize("little", [True, False])
+def test_decode_pcap_matches_reference_on_random_frames(little):
+    # seeded random frames: IPv4, IPv6 and VLAN ethertypes, raw IPv4 with
+    # no Ethernet header, every IP header length, short frames, full-range
+    # timestamps and lengths, zero and oversized cap_len, and a cut tail
+    rng = np.random.default_rng(7 + little)
+    end = "<" if little else ">"
+    recs = []
+    for i in range(4000):
+        pkt = bytearray(rng.integers(0, 256, int(rng.integers(1, 100)), dtype=np.uint8).tobytes())
+        kind = i % 6
+        if kind < 3 and len(pkt) > 14:
+            pkt[12:14] = (b"\x08\x00", b"\x86\xdd", b"\x81\x00")[kind]
+        ip = 14 if kind == 0 else 0
+        if kind in (0, 3) and len(pkt) > ip + 9:
+            pkt[ip] = 0x40 | (pkt[ip] & 0x0F)
+            pkt[ip + 9] = (6, 17, 1, 47)[i % 4]
+        if i % 97 == 0:
+            pkt = b""  # cap_len 0
+        elif i % 401 == 1:
+            pkt = bytes(65536)  # cap_len past the 65535 limit
+        orig_len = int(rng.integers(0, 2**32)) if i % 13 == 0 else len(pkt) + 4
+        ts = rng.integers(0, 2**32, 2)
+        recs.append(struct.pack(f"{end}IIII", ts[0], ts[1], len(pkt), orig_len) + bytes(pkt))
+    blob = _pcap_bytes([], little=little) + b"".join(recs)
+    for data in (blob, blob[:-7]):
+        want = _reference_rows(data, "mMTC", "r.pcap")
+        got = decoded_rows(data, "mMTC", "r.pcap")
+        assert len(want) > 3000
+        assert got == want
+        assert [tuple(map(type, r)) for r in got] == [tuple(map(type, r)) for r in want]
 
 
 def test_read_pcap_dataframe(spark, tmp_path):

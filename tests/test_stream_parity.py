@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
-import pytest
 
 from fiveg_spark.operators import stream_parity as sp
 

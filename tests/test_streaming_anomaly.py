@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from fiveg_spark.streaming.anomaly import batch_reference, streaming_ewma_anomaly
 
